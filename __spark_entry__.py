@@ -66,13 +66,11 @@ from awi_datapipelinepublic_spark.operators.windows import (
     min_over_partition,
     top_k_per_group,
 )
-from awi_datapipelinepublic_spark.sources.readers import read_events
+from awi_datapipelinepublic_spark.sources.readers import read_events, read_table
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(str(Path(sf_dir) / f"{name}.parquet"))
+_t = read_table
 
 
 def _drain(q, seconds: int = 600) -> None:

@@ -65,7 +65,9 @@ def run_clean(
     df = df.filter(F.col(spec.date_col).isNotNull())
     staging = str(Path(spec.staging_dir) / spec.name)
     write_parquet(df, staging)
-    return spark.read.parquet(staging)
+    # The schema was just written, so declaring it is exact and skips
+    # the footer-inference job a bare read would launch.
+    return spark.read.schema(df.schema).parquet(staging)
 
 
 def run_load(spark: SparkSession, spec: PipelineSpec) -> None:

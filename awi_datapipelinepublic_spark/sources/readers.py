@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from awi_datapipelinepublic_spark.functions.cleaning import apply_converters, cast_to_schema
 from awi_datapipelinepublic_spark.sources.schema import (
+    TABLE_SCHEMAS,
     date_columns,
     string_read_struct,
     to_struct_type,
@@ -23,8 +24,16 @@ from awi_datapipelinepublic_spark.sources.schema import (
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one of the synthetic parquet tables from a scale-factor dir."""
-    return spark.read.parquet(str(Path(sf_dir) / f"{name}.parquet"))
+    """Read one of the synthetic parquet tables from a scale-factor dir.
+
+    Tables in ``TABLE_SCHEMAS`` are read with their declared schema, so
+    building a query launches no schema-inference job; the files are
+    still scanned on every action. Other names fall back to inference.
+    """
+    reader = spark.read
+    if name in TABLE_SCHEMAS:
+        reader = reader.schema(TABLE_SCHEMAS[name])
+    return reader.parquet(str(Path(sf_dir) / f"{name}.parquet"))
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,7 +46,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     53-bit mantissa) and timestamp_micros. Sub-microsecond precision is
     truncated, matching every downstream engine that is µs-native.
     """
-    path = str(Path(sf_dir) / "events.parquet")
     # Set the escape hatch BEFORE the first read: probing with a
     # try/except costs one aborted Spark job per session and leaves an
     # ERROR stack in the logs. The conf is session-wide by design
@@ -45,7 +53,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns surface (int64 instead of a hard error), and every nanos
     # consumer in this engine converts explicitly right here.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_table(spark, sf_dir, "events")  # inferred: not in TABLE_SCHEMAS
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

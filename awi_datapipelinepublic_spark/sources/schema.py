@@ -22,6 +22,40 @@ from pathlib import Path
 
 from pyspark.sql import types as T
 
+# Declared schemas of the star-schema Parquet tables, as DDL: the
+# metastore sources.readers.read_table reads with, because inferring a
+# schema launches a footer-merge Spark job on every read. They are
+# exactly what Spark infers from the footers (pyarrow-written files:
+# timestamps without a UTC flag surface as TIMESTAMP_NTZ, list<float>
+# as ARRAY<FLOAT>); tests/test_table_schemas.py pins that equality.
+# ``events`` is deliberately absent: its ``ts`` physical type varies
+# (TIMESTAMP(NANOS) in some datasets), and sources.readers.read_events
+# needs the inferred footer type to pick the conversion.
+TABLE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+        "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
 _BQ_TO_SPARK: dict[str, T.DataType] = {
     "STRING": T.StringType(),
     "NUMERIC": T.DoubleType(),

@@ -405,6 +405,8 @@ def overwrite_table(
     default 1 keeps only the live snapshot (no storage growth).
     """
     target = Path(path)
+    # The lock, version dirs and pointer are all siblings of the table.
+    target.parent.mkdir(parents=True, exist_ok=True)
     lock, token = _acquire_publish_lock(target)
     try:
         with _LockHeartbeat(lock, token) as hb:
@@ -505,6 +507,7 @@ def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: lis
     # the whole read-repartition-publish serializes compaction against
     # concurrent merges instead of losing their batches.
     target = _P(path)
+    target.parent.mkdir(parents=True, exist_ok=True)
     lock, token = _acquire_publish_lock(target)
     try:
         with _LockHeartbeat(lock, token) as hb:

@@ -194,6 +194,16 @@ def published(spark, tmp_path):
     return path, _rows(spark, path)
 
 
+def test_publish_creates_missing_parent_dir(spark, tmp_path):
+    """The lock file is a sibling of the table, so a first publish into
+    a directory that does not exist yet must create it (it used to die
+    with FileNotFoundError on ``.t.lock``; demo_pipeline.py hit this)."""
+    path = tmp_path / "missing" / "t"
+    overwrite_table(_mk(spark, 0, 20), str(path))
+    assert _rows(spark, path) == sorted((r["pk"], r["d"]) for r in _mk(spark, 0, 20).collect())
+    assert not (path.parent / ".t.lock").exists()
+
+
 def test_crash_during_data_write_reads_old(spark, published, tmp_path):
     """Kill mid-materialization: a _SUCCESS-less version dir is debris —
     the pointer still serves the old snapshot and the next publish

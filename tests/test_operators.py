@@ -133,6 +133,32 @@ def test_read_events_nanos(spark, sf_dir):
     assert df.count() > 0
 
 
+def test_read_events_timestamp_nanos_file(spark, tmp_path):
+    """A real TIMESTAMP(NANOS) events file: the footer type decides the
+    conversion, which is why ``events`` has no declared schema (a
+    declared ``ts TIMESTAMP_NTZ`` fails at execution on this file).
+    Sub-microsecond digits are truncated, not rounded."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array([ns], pa.timestamp("ns")),
+        }),
+        tmp_path / "events.parquet",
+    )
+    assert str(pq.read_schema(tmp_path / "events.parquet").field("ts").type) == "timestamp[ns]"
+    df = read_events(spark, str(tmp_path))
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    (row,) = df.select(F.unix_micros("ts").alias("us"), "ts").collect()
+    assert row["us"] == ns // 1000 == 1_700_000_000_123_456
+    assert row["ts"].microsecond == 123456
+
+
 def test_connected_components_matches_union_find(spark):
     """Random graphs: Spark hash-min propagation must agree with a
     driver-side union-find on every node's component representative."""

@@ -105,9 +105,10 @@ def test_holt_linear_nan_keys_form_one_series(spark):
     Spark grouping normalizes NaN = NaN), not restart the recursion
     per row (NaN != NaN would) — the r12 ADVICE hazard. Values over
     the NaN group must be bit-identical to the same history under an
-    ordinary key; and a NaN group must not leak state into the next
-    key (NaN sorts greatest in Spark, so it is the LAST series in its
-    partition — also cover a following key in another partition)."""
+    ordinary key. Only the NaN group and one preceding real key are
+    covered: NaN sorts greatest in Spark, so no key follows the NaN
+    series, and state leaking out of it into a later key is not
+    exercised here."""
     from awi_datapipelinepublic_spark.operators.timeseries import holt_linear
 
     a, b = 0.3, 0.1
@@ -131,6 +132,9 @@ def test_holt_linear_nan_keys_form_one_series(spark):
     # and bit-identical to the ordinary-key replay of the same history
     assert got_nan == got_two
     assert got_nan[1] != (hist[1], 0.0), "NaN keys restarted per row"
+
+
+def test_twap_interval_weights_by_holding_time(spark):
     """v=10 held 3s then v=20 held 1s then a terminal sample:
     TWAP = (10·3 + 20·1)/4 = 12.5; the last observation is unweighted."""
     from awi_datapipelinepublic_spark.operators.timeseries import twap_interval
