@@ -5884,12 +5884,6 @@ _R13_WINDOW = [
     "rolling_median", "poisson_weighted_sample", "event_rate_limit",
     "degree_assortativity", "spearman_corr",
 ]
-_R12_WINDOW = _R13_WINDOW  # names kept so older tooling keeps working
-_R11_WINDOW = _R13_WINDOW
-_R10_WINDOW = _R13_WINDOW
-_R9_WINDOW = _R13_WINDOW
-_R8_WINDOW = _R13_WINDOW
-_R7_WINDOW = _R13_WINDOW
 
 
 # Gates that drain a Structured Streaming query (writeStream +
@@ -5957,7 +5951,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "merge_time_window": q_merge_time_window,
         "dedup_pipeline": q_dedup_pipeline,
         # --- Declaration order below is not significant: the driver
-        # --- window is pulled to the front via _R8_WINDOW above. ---
+        # --- window is pulled to the front via _R13_WINDOW above. ---
         "validate_expectations": q_validate_expectations,
         "kmeans_clusters": q_kmeans_clusters,
         "embedding_outliers": q_embedding_outliers,

@@ -578,6 +578,9 @@ def link_prediction(
     capped at ``max_degree`` (the pair_lift max_basket stance: refuse
     to detonate, replayable in the oracle as a degree filter; a
     1e6-degree hub's wedge set carries no ranking signal anyway).
+    ``max_degree`` also sizes the weight table: it has
+    ``max_degree − 1`` rows (one per degree in [2, max_degree]), built
+    on the driver, so a huge cap costs driver memory and time.
     One groupBy builds per-center sorted neighbor arrays (bounded at
     max_degree ids each), a codegen slice-transform explodes each
     array's unordered pairs with the center's weight attached, one
@@ -589,6 +592,8 @@ def link_prediction(
     Cites reference behavior: none (beyond-reference LLM-pipeline op).
     """
     import math
+
+    import pyarrow as pa
 
     e = (
         edges.select(
@@ -612,13 +617,16 @@ def link_prediction(
     # real plan). Values are unchanged: CPython libm literals
     # (bit-identical to the oracle's LN — the mixture_weights
     # precedent), and the broadcast join simply ignores absent degrees.
-    spark = edges.sparkSession
-    wtab = spark.createDataFrame(
-        [
-            (int(d), int(math.floor(1e9 / math.log(d))))
-            for d in range(2, int(max_degree) + 1)
-        ],
-        "d bigint, w_nano bigint",
+    # An Arrow table makes it a LocalRelation, broadcast from the JVM
+    # with no Python-worker scan.
+    degrees = list(range(2, int(max_degree) + 1))
+    wtab = edges.sparkSession.createDataFrame(
+        pa.table({
+            "d": pa.array(degrees, pa.int64()),
+            "w_nano": pa.array(
+                [int(math.floor(1e9 / math.log(d))) for d in degrees], pa.int64()
+            ),
+        })
     )
     nbrs = (
         # centers is |V|-sized — no forced broadcast (AQE demotes or

@@ -14,6 +14,8 @@ surfaced, not swallowed (improving on main.py:61-62's bare log).
 
 from __future__ import annotations
 
+import threading
+import weakref
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -130,19 +132,77 @@ VIEW_BUILDERS = {
 }
 
 
+# Caller's lookup frame → its LocalRelation copy, or None when the
+# frame does not hold driver rows only. Weak keys: an entry lives as
+# long as the caller's frame does. The lock makes the check-then-convert
+# in _local_dim run once per frame when refreshes run on several threads.
+_LOCAL_DIMS: "weakref.WeakKeyDictionary[DataFrame, DataFrame | None]" = (
+    weakref.WeakKeyDictionary()
+)
+_LOCAL_DIMS_LOCK = threading.Lock()
+
+
+def _holds_driver_rows(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a LocalRelation
+    or a LogicalRDD whose lineage starts only at ParallelCollectionRDDs:
+    rows parallelized from the driver, as ``createDataFrame(<python
+    rows>)`` builds. Such rows never change, so a copy of them is never
+    stale; a plan that reads files, tables or any other RDD fails."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    rdds = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRDD":
+            rdds.append(leaf.rdd())
+        elif kind != "LocalRelation":
+            return False
+    while rdds:
+        rdd = rdds.pop()
+        deps = rdd.dependencies()
+        if deps.isEmpty() and rdd.getClass().getSimpleName() != "ParallelCollectionRDD":
+            return False
+        rdds.extend(deps.apply(j).rdd() for j in range(deps.size()))
+    return True
+
+
+def _local_dim(dim: DataFrame) -> DataFrame:
+    """``dim`` as a JVM LocalRelation when it holds driver rows only,
+    converted once per frame object; otherwise ``dim`` itself.
+
+    A frame built from Python rows scans a PythonRDD, so every
+    broadcast of it starts Python-worker tasks again; a LocalRelation
+    is broadcast from the JVM without any task."""
+    with _LOCAL_DIMS_LOCK:
+        if dim not in _LOCAL_DIMS:
+            _LOCAL_DIMS[dim] = (
+                dim.sparkSession.createDataFrame(dim.toArrow(), schema=dim.schema)
+                if _holds_driver_rows(dim)
+                else None
+            )
+        local = _LOCAL_DIMS[dim]
+    return dim if local is None else local
+
+
 def refresh_view(
     spark: SparkSession, spec: PipelineSpec, dims: dict[str, DataFrame] | None = None
 ) -> DataFrame | None:
     """View refresh stage (reference make_view, config.py:215-221):
     rebuild the spec's analytical view over the merged base table and
     register it as a temp view under its reference name. Returns the
-    view DataFrame (None when the spec declares no view)."""
+    view DataFrame (None when the spec declares no view).
+
+    Lookup frames built from driver-side Python rows are joined as
+    LocalRelation copies made on their first refresh (``_local_dim``).
+    Any other lookup is joined as passed, never copied, so a file- or
+    table-backed lookup is read fresh on every refresh."""
     if not spec.view_name:
         return None
     base = spark.read.parquet(spec.base_table_path)
     if "_merge_month" in base.columns:
         base = base.drop("_merge_month")
-    view = VIEW_BUILDERS[spec.view_name](spark, base, dims or {})
+    dims = {name: _local_dim(dim) for name, dim in (dims or {}).items()}
+    view = VIEW_BUILDERS[spec.view_name](spark, base, dims)
     view.createOrReplaceTempView(spec.view_name)
     return view
 

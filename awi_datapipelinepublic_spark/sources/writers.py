@@ -163,9 +163,13 @@ def _acquire_publish_lock(target: Path) -> tuple[Path, str]:
                     if dage <= _TAKEOVER_STALE_SECONDS:
                         try:
                             os.link(debris, takeover)
+                            debris.unlink(missing_ok=True)
                         except FileExistsError:
-                            pass  # a newer sub-lock already owns the path
-                        debris.unlink(missing_ok=True)
+                            # A newer sub-lock already owns the path.
+                            # The debris IS the fresh racer's sub-lock
+                            # inode — leave it in place, as the
+                            # main-lock restore branch below does.
+                            pass
                         raise ConcurrentPublishError(
                             f"another writer is taking over the stale {lock} "
                             "(sub-lock re-created mid-clear); the engine is "

@@ -763,6 +763,50 @@ def test_stale_takeover_clear_is_rename_claimed(tmp_path, monkeypatch):
     assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
 
 
+def test_takeover_clear_restore_race_preserves_racer_sublock(tmp_path, monkeypatch):
+    """Clearing a stale takeover sub-lock grabs a FRESH one (a racer
+    re-created it), and the os.link restore then loses to a newer
+    sub-lock at the path. The grabbed file is the racer's only sub-lock
+    inode and must SURVIVE at the debris name — unlinking it would let
+    the racer and the newer sub-lock owner take over concurrently."""
+    import os
+    import time
+
+    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
+
+    target = tmp_path / "t"
+    lock = tmp_path / ".t.lock"
+    lock.write_text("pid=1 token=dead\n")
+    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
+    os.utime(lock, (stale, stale))
+
+    takeover = tmp_path / ".t.lock.takeover"
+    takeover.write_text("pid=2 token=crashed\n")
+    tstale = time.time() - (writers._TAKEOVER_STALE_SECONDS + 5)
+    os.utime(takeover, (tstale, tstale))
+
+    real_rename = os.rename
+
+    def racer_then_newer_sublock(src, dst):
+        if Path(src) == takeover:
+            takeover.unlink()
+            takeover.write_text("pid=9 token=racer\n")
+            real_rename(src, dst)
+            takeover.write_text("pid=10 token=newer\n")  # lands before our restore
+            return
+        real_rename(src, dst)
+
+    monkeypatch.setattr(writers.os, "rename", racer_then_newer_sublock)
+    with pytest.raises(ConcurrentPublishError, match="taking over"):
+        writers._acquire_publish_lock(target)
+    monkeypatch.undo()
+    debris = list(tmp_path.glob(".t.lock.takeover.gc-*"))
+    assert len(debris) == 1, "racer's sub-lock inode must survive at the debris name"
+    assert "token=racer" in debris[0].read_text()
+    assert "token=newer" in takeover.read_text(), "newer sub-lock untouched"
+    assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
+
+
 def test_takeover_release_spares_foreign_sublock(tmp_path):
     """The takeover critical section's release must be token-verified
     (mirroring _release_publish_lock): if the section stalled past the

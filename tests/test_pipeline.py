@@ -103,46 +103,156 @@ excel_filename_marker: ProductionRpt
     assert specs["optiom"].is_excel
 
 
+_REN_FIELDS = [
+    {"name": n, "type": t, "mode": "NULLABLE"}
+    for n, t in [
+        ("AgencyNumber", "STRING"), ("PolicyNumber", "STRING"),
+        ("PolicyEffectiveDate", "DATE"), ("PolicyExpiryDate", "DATE"),
+        ("TransactionType", "STRING"), ("LeaseIndicator", "BOOLEAN"),
+        ("DateRenewed", "DATE"), ("PolicyStatus", "STRING"),
+        ("ProducerCode1", "STRING"), ("ProducerCode2", "STRING"),
+        ("ProducerName1", "STRING"), ("ProducerName2", "STRING"),
+        ("RenewedByProducerCode2", "STRING"), ("City", "STRING"),
+        ("PostalCode", "STRING"), ("CommissionAmt", "NUMERIC"),
+        ("DateCancelled", "DATE"),
+    ]
+]
+_REN_HDR = ",".join(f["name"] for f in _REN_FIELDS) + "\n"
+_REN_ROW = "1234,P-1,2023-01-01,2024-01-15,NB,true,,R,PC1,PC2,a,b,,Calgary,T2P,10.5,\n"
+
+
+def _retention_spec(tmp_path):
+    schema_file = tmp_path / "ren.json"
+    schema_file.write_text(json.dumps(_REN_FIELDS))
+    return PipelineSpec(
+        name="renewals", schema_file=str(schema_file), date_col="PolicyExpiryDate",
+        landing_dir=str(tmp_path / "l"), staging_dir=str(tmp_path / "s"),
+        base_table_path=str(tmp_path / "b"), view_name="RETENTION",
+    )
+
+
+def _python_row_dims(spark):
+    return {
+        "geo": spark.createDataFrame(
+            [("Calgary", "South"), ("Edmonton", "North")], ["meta_city", "meta_geo"]
+        ),
+        "channels": spark.createDataFrame([("PC2", "ONLINE")], ["P2", "CHANNEL"]),
+        "agencies": spark.createDataFrame([("1234", "Main")], ["metaAgencyNumber", "metaAgencyName"]),
+        "ttypes": spark.createDataFrame([("NB", "New Business")], ["ttno", "TType"]),
+    }
+
+
+def _leaf_kinds(df):
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sorted(leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size()))
+
+
 def test_refresh_view_registers_temp_view(spark, tmp_path):
     """run_file → refresh_view: the merged base becomes a queryable
     RETENTION view under its reference name (make_view parity)."""
     from awi_datapipelinepublic_spark.plans.runner import refresh_view
 
-    ren_fields = [
-        {"name": n, "type": t, "mode": "NULLABLE"}
-        for n, t in [
-            ("AgencyNumber", "STRING"), ("PolicyNumber", "STRING"),
-            ("PolicyEffectiveDate", "DATE"), ("PolicyExpiryDate", "DATE"),
-            ("TransactionType", "STRING"), ("LeaseIndicator", "BOOLEAN"),
-            ("DateRenewed", "DATE"), ("PolicyStatus", "STRING"),
-            ("ProducerCode1", "STRING"), ("ProducerCode2", "STRING"),
-            ("ProducerName1", "STRING"), ("ProducerName2", "STRING"),
-            ("RenewedByProducerCode2", "STRING"), ("City", "STRING"),
-            ("PostalCode", "STRING"), ("CommissionAmt", "NUMERIC"),
-            ("DateCancelled", "DATE"),
-        ]
-    ]
-    schema_file = tmp_path / "ren.json"
-    schema_file.write_text(json.dumps(ren_fields))
-    spec = PipelineSpec(
-        name="renewals", schema_file=str(schema_file), date_col="PolicyExpiryDate",
-        landing_dir=str(tmp_path / "l"), staging_dir=str(tmp_path / "s"),
-        base_table_path=str(tmp_path / "b"), view_name="RETENTION",
-    )
-    hdr = ",".join(f["name"] for f in ren_fields)
-    f1 = _drop(spec, "renewals.csv",
-               hdr + "\n1234,P-1,2023-01-01,2024-01-15,NB,true,,R,PC1,PC2,a,b,,Calgary,T2P,10.5,\n")
+    spec = _retention_spec(tmp_path)
+    f1 = _drop(spec, "renewals.csv", _REN_HDR + _REN_ROW)
     run_file(spark, spec, f1)
-    dims = {
-        "geo": spark.createDataFrame([("Calgary", "South")], ["meta_city", "meta_geo"]),
-        "channels": spark.createDataFrame([("PC2", "ONLINE")], ["P2", "CHANNEL"]),
-        "agencies": spark.createDataFrame([("1234", "Main")], ["metaAgencyNumber", "metaAgencyName"]),
-        "ttypes": spark.createDataFrame([("NB", "New Business")], ["ttno", "TType"]),
-    }
-    view = refresh_view(spark, spec, dims)
+    view = refresh_view(spark, spec, _python_row_dims(spark))
     assert view is not None
     got = spark.sql("SELECT PolicyNumber, Agency, Renewed FROM RETENTION").collect()
     assert [(r["PolicyNumber"], r["Agency"], r["Renewed"]) for r in got] == [("P-1", "Main", 1)]
+
+
+def test_refresh_view_joins_python_row_dims_as_local_relations(spark, tmp_path, monkeypatch):
+    """Python-row lookups are converted to LocalRelations once per frame
+    object: the second refresh converts nothing, every dim leaf of the
+    view is a LocalRelation (no Python-worker scan), and the rows equal
+    the view built on the original frames."""
+    from awi_datapipelinepublic_spark.plans import runner, views
+
+    spec = _retention_spec(tmp_path)
+    f1 = _drop(spec, "renewals.csv", _REN_HDR + _REN_ROW + (
+        "9999,P-2,2023-02-01,2024-02-15,XX,false,,C,PC1,ZZ,c,d,,Nowhere,T3A,7,\n"
+        "1234,P-3,2023-03-01,2024-03-15,NB,true,,A,PC1,PC2,e,f,,Edmonton,T5J,,\n"
+        ",,2023-04-01,2024-04-15,RN,,,E,,,,,,,,1,\n"
+    ))
+    run_file(spark, spec, f1)
+    dims = _python_row_dims(spark)
+    df_class = type(dims["geo"])
+    to_arrow, converted = df_class.toArrow, []
+
+    def counting_to_arrow(self):
+        converted.append(self)
+        return to_arrow(self)
+
+    monkeypatch.setattr(df_class, "toArrow", counting_to_arrow)
+    runner.refresh_view(spark, spec, dims)
+    view = runner.refresh_view(spark, spec, dims)
+    monkeypatch.undo()
+
+    assert len(converted) == 4 and {id(d) for d in converted} == {id(d) for d in dims.values()}
+    assert _leaf_kinds(view) == ["LocalRelation"] * 4 + ["LogicalRelation"]
+    base = spark.read.parquet(spec.base_table_path)
+    if "_merge_month" in base.columns:
+        base = base.drop("_merge_month")
+    expected = views.retention_view(
+        base, dims["geo"], dims["channels"], dims["agencies"], dims["ttypes"]
+    )
+    got = sorted(map(tuple, view.collect()), key=repr)
+    assert got == sorted(map(tuple, expected.collect()), key=repr)
+    assert len(got) == 3  # the NULL-PolicyNumber row is filtered
+
+
+def test_local_dim_keeps_schema_and_nulls(spark):
+    """The LocalRelation copy of a Python-row lookup keeps the frame's
+    exact schema (types and nullability) and its NULLs."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        DateType, DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    from awi_datapipelinepublic_spark.plans.runner import _local_dim
+
+    schema = StructType([
+        StructField("k", StringType(), False),
+        StructField("s", StringType()),
+        StructField("n", LongType()),
+        StructField("d", DateType()),
+        StructField("x", DoubleType()),
+    ])
+    rows = [
+        ("a", "x", 2**40, dt.date(2024, 2, 29), 1.5),
+        ("b", None, None, None, None),
+        ("c", "", -1, dt.date(1970, 1, 1), float("-inf")),
+    ]
+    dim = spark.createDataFrame(rows, schema)
+    local = _local_dim(dim)
+    assert local is not dim and _leaf_kinds(local) == ["LocalRelation"]
+    assert local.schema == dim.schema
+    assert sorted(map(tuple, local.collect())) == sorted(rows)
+
+
+def test_refresh_view_reads_republished_parquet_dim_fresh(spark, tmp_path):
+    """A file-backed lookup is never frozen into a local copy: a dim
+    republished with overwrite_table between two refreshes shows its
+    new rows in the second refresh (the stale-read class of a reused
+    plan over a republished path)."""
+    from awi_datapipelinepublic_spark.plans.runner import refresh_view
+    from awi_datapipelinepublic_spark.sources.writers import overwrite_table
+
+    spec = _retention_spec(tmp_path)
+    f1 = _drop(spec, "renewals.csv", _REN_HDR + _REN_ROW)
+    run_file(spark, spec, f1)
+    geo_path = str(tmp_path / "dims" / "geo")
+
+    def refresh(geo_rows):
+        overwrite_table(spark.createDataFrame(geo_rows, "meta_city string, meta_geo string"), geo_path)
+        dims = {**_python_row_dims(spark), "geo": spark.read.parquet(geo_path)}
+        view = refresh_view(spark, spec, dims)
+        assert "LogicalRelation" in _leaf_kinds(dims["geo"])
+        return [r["Geography"] for r in view.collect()]
+
+    assert refresh([("Calgary", "South")]) == ["South"]
+    assert refresh([("Calgary", "Foothills")]) == ["Foothills"]
 
 
 def test_streaming_pipeline_available_now(spark, spec, tmp_path):
