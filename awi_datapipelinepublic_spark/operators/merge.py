@@ -112,8 +112,8 @@ def merge_into_path(
 def _table_location(spark, table: str):
     """Managed-table directory under the session warehouse — used both
     for orphan cleanup and as the anchor for the per-table publish
-    lock (the lock file is a warehouse-dir sibling, so every writer of
-    the same catalog name contends on the same path)."""
+    lock (a kernel flock on a warehouse-dir sibling file, so every
+    writer of the same catalog name contends on the same lock)."""
     from pathlib import Path
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
@@ -177,30 +177,20 @@ def merge_into_table(
     affected partitions rewrite; the monthly partitioning below is what
     makes that cheap.
     """
-    from awi_datapipelinepublic_spark.sources.writers import (
-        _acquire_publish_lock,
-        _LockHeartbeat,
-        _release_publish_lock,
-    )
+    from awi_datapipelinepublic_spark.sources.writers import publish_lock
 
     if partition_by_month:
         new_batch = new_batch.withColumn(
             "_merge_month", F.date_format(F.col(date_col), "yyyy-MM")
         )
-    # Same advisory publish lock as the path writer (writers.py), keyed
-    # on the managed-table location so every writer of this catalog
-    # name contends on one file: without it two concurrent catalog
-    # merges race the `__staging` create/DROP/RENAME and one batch's
-    # merge silently vanishes. Held across recovery + read + staging +
-    # swap; heartbeat keeps a slow writer's lock fresh.
-    loc = _table_location(spark, table)
-    loc.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(loc)
-    try:
-        with _LockHeartbeat(lock, token):
-            _merge_into_table_locked(spark, table, new_batch, date_col, partition_by_month)
-    finally:
-        _release_publish_lock(lock, token)
+    # Same publish lock as the path writer (writers.py), keyed on the
+    # managed-table location so every writer of this catalog name
+    # contends on one file: without it two concurrent catalog merges
+    # race the `__staging` create/DROP/RENAME and one batch's merge
+    # silently vanishes. Held across recovery + read + staging + swap;
+    # the kernel frees it if this process dies mid-merge.
+    with publish_lock(_table_location(spark, table)):
+        _merge_into_table_locked(spark, table, new_batch, date_col, partition_by_month)
 
 
 def _merge_into_table_locked(
@@ -398,10 +388,8 @@ def refresh_monthly_rollup(
     from pathlib import Path
 
     from awi_datapipelinepublic_spark.sources.writers import (
-        _acquire_publish_lock,
-        _LockHeartbeat,
         _publish_locked,
-        _release_publish_lock,
+        publish_lock,
         recover_table,
     )
 
@@ -411,36 +399,25 @@ def refresh_monthly_rollup(
     # would interleave and one refresh's months would vanish from the
     # survivor's snapshot.
     target = Path(rollup_path)
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(target)
-    try:
-        with _LockHeartbeat(lock, token) as hb:
-            recover_table(rollup_path)
-            have_rollup = target.exists()
-            if since_month is not None and not have_rollup:
-                # No stored rollup to merge the fresh months over: an
-                # incremental refresh would publish ONLY months >=
-                # since_month and silently truncate all history. Fall
-                # back to a full rebuild from the unfiltered base.
-                since_month = None
-            base = spark.read.parquet(base_path)
-            if since_month is not None:
-                base = base.filter(F.col("_merge_month") >= F.lit(since_month))
-            fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
-            if since_month is not None:
-                old = spark.read.parquet(rollup_path)
-                merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
-            else:
-                merged = fresh
-            _publish_locked(
-                merged,
-                target,
-                partition_by=["_merge_month"],
-                keep_versions=1,
-                heartbeat=hb,
-            )
-    finally:
-        _release_publish_lock(lock, token)
+    with publish_lock(target):
+        recover_table(rollup_path)
+        have_rollup = target.exists()
+        if since_month is not None and not have_rollup:
+            # No stored rollup to merge the fresh months over: an
+            # incremental refresh would publish ONLY months >=
+            # since_month and silently truncate all history. Fall
+            # back to a full rebuild from the unfiltered base.
+            since_month = None
+        base = spark.read.parquet(base_path)
+        if since_month is not None:
+            base = base.filter(F.col("_merge_month") >= F.lit(since_month))
+        fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
+        if since_month is not None:
+            old = spark.read.parquet(rollup_path)
+            merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
+        else:
+            merged = fresh
+        _publish_locked(merged, target, partition_by=["_merge_month"], keep_versions=1)
 
 
 def cdc_apply(

@@ -6,13 +6,19 @@ analogs here write Parquet; ``overwrite_table`` stages to a temp dir
 and swaps so a plan that *reads* the target can still produce it
 (Spark cannot overwrite a path it is reading — the read-then-overwrite
 hazard called out in SURVEY.md §7).
+
+Publishes are single-writer per table, enforced by :func:`publish_lock`:
+a kernel ``flock`` on a sibling lock file. Like the symlink pointer it
+needs a local POSIX filesystem; a crashed holder's lock frees at once.
 """
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -59,281 +65,51 @@ class ConcurrentPublishError(RuntimeError):
     engine's contract is single-writer per table (the reference's
     per-type Cloud Functions, main.py:39-41); this error makes a
     violated contract LOUD instead of letting two writers race the
-    pointer (last-flip-wins would silently drop a whole publish)."""
+    pointer (last-flip-wins would silently drop a whole publish).
+    Raised by :func:`publish_lock`, a kernel ``flock`` — like the
+    symlink pointer it needs a local POSIX filesystem, and a crashed
+    holder's lock is freed the moment its process dies."""
 
 
-_LOCK_STALE_SECONDS = 3600.0
-_HEARTBEAT_SECONDS = _LOCK_STALE_SECONDS / 4
-# A takeover critical section is a few syscalls (stat + rename + stat +
-# unlink) — milliseconds. 60 s of no-progress means the taker-over
-# crashed inside it; its sub-lock is then debris anyone may clear.
-_TAKEOVER_STALE_SECONDS = 60.0
+@contextmanager
+def publish_lock(target: Path):
+    """Per-table publish lock: an exclusive, non-blocking ``flock`` on
+    the sibling ``.{name}.lock``, held for the ``with`` body. While one
+    writer holds it, every other writer gets
+    :class:`ConcurrentPublishError` — another thread too, since flock
+    locks belong to the open file description, not the process. The
+    kernel drops the lock when the fd closes or the process dies, so
+    there is nothing to age out and nothing to take over. ``open``
+    fds are non-inheritable: the JVM child never keeps it alive.
 
-
-def _acquire_publish_lock(target: Path) -> tuple[Path, str]:
-    """Advisory per-table publish lock: O_EXCL-create a sibling
-    ``.{name}.lock`` stamped with a per-acquisition token (atomic on
-    POSIX and HDFS; on S3 use a conditional PUT). Returns
-    ``(lock_path, token)`` — release with :func:`_release_publish_lock`
-    which compares the token so a writer can only ever remove its OWN
-    lock. A FRESH foreign lock raises ConcurrentPublishError.
-
-    Liveness vs staleness: a LIVE holder heartbeat-touches the lock
-    every ``_HEARTBEAT_SECONDS`` (see :class:`_LockHeartbeat`), so its
-    mtime never ages past ``_LOCK_STALE_SECONDS`` no matter how long
-    the publish runs — a stale mtime therefore means a crashed writer,
-    not a slow one. The stale horizon must exceed the heartbeat
-    interval plus worst-case scheduler pause, NOT the write duration.
-
-    Takeover is an atomic ``os.rename`` of the observed stale inode to
-    a private claim name: when N racers observe the same stale lock,
-    exactly one rename succeeds (losers get FileNotFoundError and
-    retry, then see the winner's fresh lock and raise). The winner
-    re-stats the claimed file and, if the inode changed or the mtime
-    was refreshed between its stat and its rename (a heartbeat landed),
-    restores it via ``os.link`` (create-if-absent, atomic) and backs
-    off — it never destroys a live writer's lock, closing the
-    unlink-a-fresh-lock race of the naive unlink-and-recreate scheme.
+    Release unlinks the file while still holding it, so no lock file
+    outlives a publish. A writer that opened the old inode before that
+    unlink can win the flock after it, so an acquirer only counts as
+    holder once the path still names the inode it locked; otherwise
+    it retries on the live path.
     """
-    import time
-
     lock = target.parent / f".{target.name}.lock"
+    lock.parent.mkdir(parents=True, exist_ok=True)
     while True:
-        token = uuid.uuid4().hex
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, f"pid={os.getpid()} token={token}\n".encode())
-            os.close(fd)
-            return lock, token
-        except FileExistsError:
+        with open(lock, "a") as f:
             try:
-                st = lock.stat()
+                fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise ConcurrentPublishError(
+                    f"another writer holds {lock}; the engine is "
+                    "single-writer per table — serialize publishes upstream"
+                ) from None
+            try:
+                held = os.path.samestat(os.fstat(f.fileno()), os.stat(lock))
             except FileNotFoundError:
-                continue  # holder released between our open and stat
-            age = time.time() - st.st_mtime
-            if age < _LOCK_STALE_SECONDS:
-                raise ConcurrentPublishError(
-                    f"another writer holds {lock} (age {age:.0f}s); "
-                    "the engine is single-writer per table — serialize "
-                    "publishes upstream"
-                ) from None
-            # Stale lock: take over — but SERIALIZE takeover attempts
-            # through a sibling O_EXCL sub-lock. Without it, a racer
-            # whose stat predates the previous takeover winner's fresh
-            # re-create can rename that FRESH lock away, and during its
-            # rename→restore absence window a third racer's O_EXCL
-            # create succeeds: two writers admitted (caught by
-            # test_stale_takeover_race_exactly_one_winner). Inside the
-            # critical section the staleness check is REDONE on a fresh
-            # stat, so a takeover can only ever claim an inode it just
-            # observed stale while no other takeover is in flight.
-            takeover = target.parent / f".{target.name}.lock.takeover"
+                held = False
+            if not held:
+                continue  # locked a released (unlinked) inode — retry
             try:
-                tfd = os.open(takeover, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                # Another takeover is in flight. A crashed one (no
-                # heartbeat on takeover files; the critical section is
-                # milliseconds) ages out fast — clear and retry.
-                try:
-                    tage = time.time() - takeover.stat().st_mtime
-                except FileNotFoundError:
-                    continue  # it just finished — retry from the top
-                if tage > _TAKEOVER_STALE_SECONDS:
-                    # Clear the crashed sub-lock with the same
-                    # rename-claim + verify + restore discipline as the
-                    # main lock (ADVICE r12): when N racers observe the
-                    # same >60s-old takeover file, exactly ONE rename
-                    # succeeds; and if what we grabbed turns out FRESH
-                    # (re-created between our stat and our rename —
-                    # the window an unlink-by-path would silently
-                    # destroy), we put it back via create-only link
-                    # and treat the takeover as in flight.
-                    debris = (
-                        target.parent
-                        / f".{target.name}.lock.takeover.gc-{token[:8]}"
-                    )
-                    try:
-                        os.rename(takeover, debris)
-                    except FileNotFoundError:
-                        continue  # another clearer won — retry from the top
-                    try:
-                        dage = time.time() - debris.stat().st_mtime
-                    except FileNotFoundError:
-                        continue
-                    if dage <= _TAKEOVER_STALE_SECONDS:
-                        try:
-                            os.link(debris, takeover)
-                            debris.unlink(missing_ok=True)
-                        except FileExistsError:
-                            # A newer sub-lock already owns the path.
-                            # The debris IS the fresh racer's sub-lock
-                            # inode — leave it in place, as the
-                            # main-lock restore branch below does.
-                            pass
-                        raise ConcurrentPublishError(
-                            f"another writer is taking over the stale {lock} "
-                            "(sub-lock re-created mid-clear); the engine is "
-                            "single-writer per table"
-                        ) from None
-                    debris.unlink(missing_ok=True)
-                    continue
-                raise ConcurrentPublishError(
-                    f"another writer is taking over the stale {lock}; "
-                    "the engine is single-writer per table"
-                ) from None
-            try:
-                os.write(tfd, f"pid={os.getpid()} token={token}\n".encode())
-                os.close(tfd)
-                # Re-verify under the takeover lock: our earlier stat
-                # may predate a previous winner's fresh lock.
-                try:
-                    st2 = lock.stat()
-                except FileNotFoundError:
-                    continue  # released mid-takeover — retry create
-                if time.time() - st2.st_mtime < _LOCK_STALE_SECONDS:
-                    raise ConcurrentPublishError(
-                        f"another writer holds {lock} (re-created before "
-                        "our takeover); the engine is single-writer per "
-                        "table"
-                    ) from None
-                claim = target.parent / f".{target.name}.lock.claim-{token[:8]}"
-                try:
-                    os.rename(lock, claim)
-                except FileNotFoundError:
-                    continue  # holder released first — retry create
-                cst = claim.stat()
-                if cst.st_ino != st2.st_ino or time.time() - cst.st_mtime < _LOCK_STALE_SECONDS:
-                    # Between our fresh stat and our rename the lock was
-                    # heartbeat-refreshed: we grabbed a LIVE (slow)
-                    # writer's lock. Put it back (link = create-only,
-                    # never clobbers a newer lock) and treat as held.
-                    try:
-                        os.link(claim, lock)
-                    except FileExistsError:
-                        # A third writer O_EXCL-created a fresh lock
-                        # inside our rename→restore window. The claim IS
-                        # the live holder's lock inode — unlinking it
-                        # here would destroy the only record of that
-                        # holder, so LEAVE IT IN PLACE; the holder's
-                        # heartbeat re-creates the canonical lock path
-                        # on its next beat (see _LockHeartbeat._run),
-                        # which surfaces the conflict to whichever of
-                        # the two survives. We just back off.
-                        raise ConcurrentPublishError(
-                            f"another writer holds {lock} (refreshed "
-                            "mid-takeover; restore raced a third writer); "
-                            "the engine is single-writer per table"
-                        ) from None
-                    claim.unlink(missing_ok=True)
-                    raise ConcurrentPublishError(
-                        f"another writer holds {lock} (refreshed "
-                        "mid-takeover); the engine is single-writer per "
-                        "table"
-                    ) from None
-                claim.unlink()  # stale inode confirmed ours alone — retry create
+                yield
             finally:
-                _release_takeover(takeover, token)
-
-
-def _release_takeover(takeover: Path, token: str) -> None:
-    """Remove the takeover sub-lock ONLY if it still carries our token
-    (mirrors :func:`_release_publish_lock`): if our critical section
-    stalled past ``_TAKEOVER_STALE_SECONDS`` (VM pause, NFS hang), a
-    racer may have legitimately cleared our file and a NEW takeover may
-    own the path — an unconditional unlink here would delete that
-    racer's live sub-lock (ADVICE r12)."""
-    try:
-        if f"token={token}" in takeover.read_text():
-            takeover.unlink(missing_ok=True)
-    except FileNotFoundError:
-        pass
-
-
-def _release_publish_lock(lock: Path, token: str) -> None:
-    """Remove the lock ONLY if it still carries our token — after a
-    (theoretical) takeover, the thief's lock survives our release, so
-    two release paths can never unlink each other's fresh locks."""
-    try:
-        if f"token={token}" in lock.read_text():
-            lock.unlink(missing_ok=True)
-    except FileNotFoundError:
-        pass
-
-
-class _LockHeartbeat:
-    """Daemon thread that touches the lock's mtime every
-    ``_HEARTBEAT_SECONDS`` while a publish runs, so a slow-but-alive
-    writer (plausible for 100 TB-scale snapshot writes) is never
-    mistaken for a crashed one and never has its lock taken over
-    mid-publish. Crash semantics are unchanged: a dead process stops
-    touching, the mtime ages out, takeover proceeds.
-
-    Self-healing: if a beat finds the lock file MISSING (a mistaken
-    takeover renamed it away), the heartbeat O_EXCL-recreates it with
-    the holder's own token, so a live holder's lock presence is
-    restored within one beat and later acquirers still see it held.
-    If the recreate loses to a usurper's fresh lock (FileExistsError),
-    the lock is genuinely contested: ``lost`` flips True and the
-    publish path refuses to flip the pointer (ConcurrentPublishError)
-    rather than racing the usurper's publish."""
-
-    def __init__(
-        self,
-        lock: Path,
-        token: str | None = None,
-        interval: float = _HEARTBEAT_SECONDS,
-    ):
-        import threading
-
-        self._lock = lock
-        self._token = token
-        self.lost = False
-        self._stop = threading.Event()
-        self._thread = threading.Thread(
-            target=self._run, args=(interval,), daemon=True
-        )
-
-    def _run(self, interval: float) -> None:
-        while not self._stop.wait(interval):
-            try:
-                os.utime(self._lock)
-                if self._token is not None:
-                    # utime is path-based and content-agnostic: if the
-                    # lock file was REPLACED (not just touched), we'd
-                    # happily keep a usurper's lock fresh forever.
-                    # Token-verify each beat — a mismatch means the
-                    # lock is genuinely someone else's now.
-                    try:
-                        if f"token={self._token}" not in self._lock.read_text():
-                            self.lost = True
-                    except OSError:
-                        pass
-            except FileNotFoundError:
-                if self._token is None:
-                    continue  # legacy caller: nothing to restore with
-                try:
-                    fd = os.open(
-                        self._lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                    )
-                    os.write(
-                        fd,
-                        f"pid={os.getpid()} token={self._token}\n".encode(),
-                    )
-                    os.close(fd)
-                except FileExistsError:
-                    self.lost = True  # a usurper holds a fresh lock now
-                except OSError:
-                    pass
-            except OSError:
-                pass  # transient stat/utime failure: retry next beat
-
-    def __enter__(self):
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join(timeout=5)
+                lock.unlink(missing_ok=True)
+            return
 
 
 def recover_table(path: str) -> None:
@@ -409,14 +185,8 @@ def overwrite_table(
     default 1 keeps only the live snapshot (no storage growth).
     """
     target = Path(path)
-    # The lock, version dirs and pointer are all siblings of the table.
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(target)
-    try:
-        with _LockHeartbeat(lock, token) as hb:
-            _publish_locked(df, target, partition_by, keep_versions, hb)
-    finally:
-        _release_publish_lock(lock, token)
+    with publish_lock(target):
+        _publish_locked(df, target, partition_by, keep_versions)
 
 
 def _publish_locked(
@@ -424,7 +194,6 @@ def _publish_locked(
     target: Path,
     partition_by: list[str] | None,
     keep_versions: int,
-    heartbeat: "_LockHeartbeat | None" = None,
 ) -> None:
     path = str(target)
     recover_table(path)
@@ -442,27 +211,6 @@ def _publish_locked(
         w = w.partitionBy(*partition_by)
     w.parquet(str(vdir))
     (vdir / "_SUCCESS").touch()  # belt-and-braces if the committer marker is off
-
-    def _abort_takeover() -> None:
-        # The heartbeat detected a usurper's fresh lock while we wrote:
-        # flipping the pointer now would race the usurper's publish.
-        # Strip the refused snapshot's _SUCCESS and remove the vdir so
-        # recover_table / time travel / GC treat it as crash debris —
-        # a _SUCCESS-complete unpointed snapshot would otherwise be
-        # exactly what recovery repoints to, silently publishing the
-        # version this abort refused.
-        (vdir / "_SUCCESS").unlink(missing_ok=True)
-        shutil.rmtree(vdir, ignore_errors=True)
-        raise ConcurrentPublishError(
-            f"publish lock for {target} was taken over mid-write; "
-            "refusing to flip the pointer over the new holder's publish"
-        )
-
-    if heartbeat is not None and heartbeat.lost:
-        # Checked BEFORE the legacy migration rename: in the takeover
-        # path the pre-versioning dir must stay in place at `path`, not
-        # be renamed away leaving recovery to pick our refused vdir.
-        _abort_takeover()
     if migrate_legacy:
         # Pre-versioning plain-dir table: fold it into the version
         # scheme (its _SUCCESS makes it recoverable) so the swap is a
@@ -470,11 +218,6 @@ def _publish_locked(
         # window where `path` is briefly absent; recover_table rolls it
         # forward (both snapshots are complete, newest wins).
         os.rename(target, target.parent / f".{target.name}.v-{n - 1:08d}-legacy")
-        if heartbeat is not None and heartbeat.lost:
-            # Takeover landed during the rename window: same abort;
-            # with the refused vdir gone, recovery repoints to the
-            # just-migrated legacy snapshot (newest complete).
-            _abort_takeover()
     _point_at(target, vdir)
     # GC: keep the pointer's target plus the newest complete snapshots
     # up to keep_versions; everything else — superseded history past
@@ -502,29 +245,22 @@ def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: lis
     churn. Sizing uses the table's on-disk bytes; the rewrite keeps
     partition columns. Returns the file count after compaction.
     """
-    from pathlib import Path as _P
-
     # The publish lock is held across the READ as well as the rewrite:
     # compaction republishes what it read, so a merge that landed
     # between an unlocked read and the pointer flip would be silently
     # erased by the compacted (stale) snapshot. Holding the lock for
     # the whole read-repartition-publish serializes compaction against
     # concurrent merges instead of losing their batches.
-    target = _P(path)
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock, token = _acquire_publish_lock(target)
-    try:
-        with _LockHeartbeat(lock, token) as hb:
-            total_bytes = sum(f.stat().st_size for f in target.rglob("*.parquet"))
-            n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-            df = spark.read.parquet(path)
-            if partition_by:
-                compacted = df.repartition(n_files, *[df[c] for c in partition_by])
-            else:
-                compacted = df.repartition(n_files)
-            _publish_locked(compacted, target, partition_by, keep_versions=1, heartbeat=hb)
-    finally:
-        _release_publish_lock(lock, token)
+    target = Path(path)
+    with publish_lock(target):
+        total_bytes = sum(f.stat().st_size for f in target.rglob("*.parquet"))
+        n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
+        df = spark.read.parquet(path)
+        if partition_by:
+            compacted = df.repartition(n_files, *[df[c] for c in partition_by])
+        else:
+            compacted = df.repartition(n_files)
+        _publish_locked(compacted, target, partition_by, keep_versions=1)
     return len(list(target.rglob("*.parquet")))
 
 

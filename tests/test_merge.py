@@ -532,28 +532,22 @@ def test_atomic_writer_random_crash_sequences(spark, tmp_path_factory, data):
     assert len(list(path.parent.glob(f".{path.name}.v-*"))) == 1
 
 
-def test_publish_lock_rejects_concurrent_and_takes_over_stale(spark, published):
-    """Single-writer contract made loud: a FRESH foreign lock refuses
-    the publish (table untouched); a STALE lock (crashed writer — its
-    pointer flip can never come) is taken over and the publish lands."""
-    import os
-    import time
-
+def test_publish_lock_rejects_concurrent(spark, published):
+    """Single-writer contract made loud: while another writer holds the
+    publish lock the publish is refused (table untouched); once the
+    holder releases, the publish lands and leaves the lock free."""
     from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
 
     path, old_rows = published
-    lock = path.parent / f".{path.name}.lock"
-    lock.write_text("pid=99999\n")
-    with pytest.raises(ConcurrentPublishError):
-        overwrite_table(_mk(spark, 700, 705), str(path))
+    with writers.publish_lock(path):
+        with pytest.raises(ConcurrentPublishError):
+            overwrite_table(_mk(spark, 700, 705), str(path))
     assert _rows(spark, path) == old_rows
-    # age the lock past the staleness horizon → takeover
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 5)
-    os.utime(lock, (stale, stale))
     new = _mk(spark, 800, 805)
     overwrite_table(new, str(path))
     assert _rows(spark, path) == sorted((r["pk"], r["d"]) for r in new.collect())
-    assert not lock.exists(), "lock must be released after publish"
+    with writers.publish_lock(path):
+        pass  # released after the publish: a fresh lock acquires
 
 
 def test_merge_schema_evolution_pads_with_nulls(spark, tmp_path):
@@ -601,9 +595,8 @@ def test_merge_schema_evolution_pads_with_nulls(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 concurrency hardening: rename-claim takeover, heartbeat
-# liveness, catalog-merge locking, lost-history recovery ordering, and
-# compaction-vs-merge serialization.
+# Publish concurrency: the per-table flock, catalog-merge locking,
+# lost-history recovery ordering, and compaction-vs-merge serialization.
 # ---------------------------------------------------------------------------
 
 
@@ -637,269 +630,124 @@ def test_merge_into_path_recovers_crashed_migration_before_merge(
     assert len(got) == 41, "history must survive the recovered merge"
 
 
-def test_stale_takeover_race_exactly_one_winner(tmp_path):
-    """N racers observing the SAME stale lock: the atomic rename-claim
-    guarantees exactly one acquires; losers see the winner's fresh lock
-    and raise (the naive unlink-and-recreate let a loser unlink the
-    winner's FRESH lock, re-admitting two writers)."""
-    import os
+def test_publish_lock_race_exactly_one_winner(tmp_path):
+    """N threads racing for one table's lock: exactly one acquires and
+    the rest are refused. flock locks belong to the open file
+    description, so threads of one process contend like processes do.
+    The winner holds the lock until every loser has tried."""
     import threading
-    import time
 
     from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
 
     target = tmp_path / "t"
-    lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=dead\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-
-    barrier = threading.Barrier(4)
+    start = threading.Barrier(4)
+    tried = threading.Barrier(4)
     results = []
     res_lock = threading.Lock()
 
     def racer():
-        barrier.wait()
+        start.wait()
         try:
-            got = writers._acquire_publish_lock(target)
-            with res_lock:
-                results.append(("acquired", got))
+            with writers.publish_lock(target):
+                with res_lock:
+                    results.append("acquired")
+                tried.wait(timeout=30)
         except ConcurrentPublishError:
             with res_lock:
-                results.append(("refused", None))
+                results.append("refused")
+            tried.wait(timeout=30)
 
     threads = [threading.Thread(target=racer) for _ in range(4)]
     for t in threads:
         t.start()
     for t in threads:
         t.join(timeout=30)
-    assert sorted(r[0] for r in results) == [
-        "acquired",
-        "refused",
-        "refused",
-        "refused",
-    ]
-    assert lock.exists(), "winner's fresh lock must survive the losers"
-    winner_lock, token = next(r[1] for r in results if r[0] == "acquired")
-    assert f"token={token}" in lock.read_text()
-    assert not list(tmp_path.glob(".t.lock.claim-*")), "claims are cleaned up"
-    assert not (tmp_path / ".t.lock.takeover").exists(), "takeover sub-lock cleaned up"
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(results) == ["acquired", "refused", "refused", "refused"]
+    with writers.publish_lock(target):
+        pass  # the winner released: a fresh lock acquires
 
 
-def test_takeover_serialized_by_sublock(tmp_path):
-    """Takeover attempts are serialized through the .lock.takeover
-    sub-lock: while one is in flight, a second stale-lock observer
-    refuses instead of renaming (its stat could predate the winner's
-    fresh re-create — the two-winner escape the r12 race test caught).
-    A CRASHED takeover (sub-lock older than _TAKEOVER_STALE_SECONDS)
-    is cleared and the lock is re-taken normally."""
-    import os
-    import time
+def test_publish_lock_refuses_on_a_released_inode(tmp_path, monkeypatch):
+    """Release unlinks the lock file, so a writer can open the old
+    inode, lose the CPU while the holder releases and a new writer
+    locks a fresh file, then win the flock on the dead inode. It must
+    notice the path now names another inode and contend on that one —
+    here refused, since the new writer still holds it."""
+    import fcntl
 
     from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
 
     target = tmp_path / "t"
     lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=dead\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
+    real_flock = fcntl.flock
+    newer = []
 
-    takeover = tmp_path / ".t.lock.takeover"
-    takeover.write_text("pid=2 token=inflight\n")  # fresh: in flight
-    with pytest.raises(ConcurrentPublishError, match="taking over"):
-        writers._acquire_publish_lock(target)
-    assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
+    def release_then_relock(f, op):
+        if not newer:
+            lock.unlink()  # the old holder released...
+            newer.append(open(lock, "a"))  # ...and a new writer locked
+            real_flock(newer[0], fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return real_flock(f, op)
 
-    # crashed takeover: sub-lock aged out — cleared, takeover proceeds
-    tstale = time.time() - (writers._TAKEOVER_STALE_SECONDS + 5)
-    os.utime(takeover, (tstale, tstale))
-    got_lock, token = writers._acquire_publish_lock(target)
-    assert f"token={token}" in lock.read_text()
-    assert not takeover.exists()
-    writers._release_publish_lock(got_lock, token)
-
-
-def test_stale_takeover_clear_is_rename_claimed(tmp_path, monkeypatch):
-    """Clearing a crashed (stale) takeover sub-lock must be a rename-
-    claim with a freshness verify, not an unlink-by-path: if a racer
-    clears the same stale file and re-creates a FRESH sub-lock between
-    our stat and our clear, we must restore that fresh file and back
-    off — never destroy it (ADVICE r12: the two-takeover re-admission
-    window)."""
-    import os
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
-
-    target = tmp_path / "t"
-    lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=dead\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-
-    takeover = tmp_path / ".t.lock.takeover"
-    takeover.write_text("pid=2 token=crashed\n")
-    tstale = time.time() - (writers._TAKEOVER_STALE_SECONDS + 5)
-    os.utime(takeover, (tstale, tstale))
-
-    real_rename = os.rename
-
-    def racer_wins_then_rename(src, dst):
-        # Between our stat (which saw the crashed file) and our clear,
-        # a racer clears the crashed sub-lock and re-creates a FRESH
-        # one at the same path.
-        if Path(src) == takeover:
-            takeover.unlink()
-            takeover.write_text("pid=9 token=racer\n")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(writers.os, "rename", racer_wins_then_rename)
-    with pytest.raises(ConcurrentPublishError, match="taking over"):
-        writers._acquire_publish_lock(target)
-    monkeypatch.undo()
-    assert takeover.exists(), "racer's fresh sub-lock must be restored"
-    assert "token=racer" in takeover.read_text()
-    assert not list(tmp_path.glob(".t.lock.takeover.gc-*")), "no debris left"
-    assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
-
-
-def test_takeover_clear_restore_race_preserves_racer_sublock(tmp_path, monkeypatch):
-    """Clearing a stale takeover sub-lock grabs a FRESH one (a racer
-    re-created it), and the os.link restore then loses to a newer
-    sub-lock at the path. The grabbed file is the racer's only sub-lock
-    inode and must SURVIVE at the debris name — unlinking it would let
-    the racer and the newer sub-lock owner take over concurrently."""
-    import os
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
-
-    target = tmp_path / "t"
-    lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=dead\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-
-    takeover = tmp_path / ".t.lock.takeover"
-    takeover.write_text("pid=2 token=crashed\n")
-    tstale = time.time() - (writers._TAKEOVER_STALE_SECONDS + 5)
-    os.utime(takeover, (tstale, tstale))
-
-    real_rename = os.rename
-
-    def racer_then_newer_sublock(src, dst):
-        if Path(src) == takeover:
-            takeover.unlink()
-            takeover.write_text("pid=9 token=racer\n")
-            real_rename(src, dst)
-            takeover.write_text("pid=10 token=newer\n")  # lands before our restore
-            return
-        real_rename(src, dst)
-
-    monkeypatch.setattr(writers.os, "rename", racer_then_newer_sublock)
-    with pytest.raises(ConcurrentPublishError, match="taking over"):
-        writers._acquire_publish_lock(target)
-    monkeypatch.undo()
-    debris = list(tmp_path.glob(".t.lock.takeover.gc-*"))
-    assert len(debris) == 1, "racer's sub-lock inode must survive at the debris name"
-    assert "token=racer" in debris[0].read_text()
-    assert "token=newer" in takeover.read_text(), "newer sub-lock untouched"
-    assert lock.read_text() == "pid=1 token=dead\n", "stale lock untouched"
-
-
-def test_takeover_release_spares_foreign_sublock(tmp_path):
-    """The takeover critical section's release must be token-verified
-    (mirroring _release_publish_lock): if the section stalled past the
-    staleness horizon and a racer legitimately cleared our sub-lock and
-    created its own, our release must NOT unlink the racer's file
-    (ADVICE r12: the unconditional finally-unlink flaw)."""
-    takeover = tmp_path / ".t.lock.takeover"
-    takeover.write_text("pid=9 token=racer\n")
-    writers._release_takeover(takeover, "ours")
-    assert takeover.exists(), "foreign sub-lock must survive our release"
-
-    takeover.unlink()
-    takeover.write_text("pid=1 token=ours\n")
-    writers._release_takeover(takeover, "ours")
-    assert not takeover.exists(), "own sub-lock is released"
-
-    # missing file: release is a no-op, never raises
-    writers._release_takeover(takeover, "ours")
-
-
-def test_takeover_backs_off_when_lock_refreshed_mid_claim(tmp_path, monkeypatch):
-    """If a heartbeat lands between the racer's stat and its rename
-    (the lock is STALE-looking but its holder is alive), the racer must
-    restore the lock and back off — never destroy a live writer's lock."""
-    import os
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
-
-    target = tmp_path / "t"
-    lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=alive\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-
-    real_rename = os.rename
-
-    def revive_then_rename(src, dst):
-        os.utime(lock)  # the live holder's heartbeat fires first
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(writers.os, "rename", revive_then_rename)
-    with pytest.raises(ConcurrentPublishError):
-        writers._acquire_publish_lock(target)
-    monkeypatch.undo()
-    assert lock.exists(), "live holder's lock must be restored"
-    assert "token=alive" in lock.read_text()
-    assert not list(tmp_path.glob(".t.lock.claim-*"))
-
-
-def test_heartbeat_keeps_slow_publish_lock_fresh(tmp_path):
-    """A slow-but-alive publish must never look stale: the heartbeat
-    refreshes the lock's mtime, so a contender arriving after the
-    nominal staleness horizon still refuses instead of stealing."""
-    import os
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
-
-    target = tmp_path / "t"
-    lock, token = writers._acquire_publish_lock(target)
-    # simulate a publish already _LOCK_STALE_SECONDS old...
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-    # ...whose holder is alive: one heartbeat tick refreshes it
-    with writers._LockHeartbeat(lock, interval=0.05):
-        time.sleep(0.3)
+    lock.touch()  # left by the old holder, still holding it
+    monkeypatch.setattr(writers.fcntl, "flock", release_then_relock)
+    try:
         with pytest.raises(ConcurrentPublishError):
-            writers._acquire_publish_lock(target)
-    writers._release_publish_lock(lock, token)
-    assert not lock.exists()
+            with writers.publish_lock(target):
+                pass
+    finally:
+        for f in newer:
+            f.close()
 
 
-def test_release_only_removes_own_token(tmp_path):
-    """Token-checked release: a writer whose lock was (theoretically)
-    replaced must not unlink the new holder's lock."""
-    target = tmp_path / "t"
-    lock, token = writers._acquire_publish_lock(target)
-    lock.write_text("pid=2 token=someoneelse\n")  # usurped
-    writers._release_publish_lock(lock, token)
-    assert lock.exists(), "foreign lock must survive our release"
-    writers._release_publish_lock(lock, "someoneelse")
-    assert not lock.exists()
+def test_publish_lock_freed_when_holder_is_killed(spark, published):
+    """A holder process killed with SIGKILL never runs its release, yet
+    the kernel frees its flock at once: while the child lives the
+    publish is refused, after the kill it lands with no wait and no
+    manual cleanup."""
+    import os
+    import subprocess
+
+    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
+
+    path, old_rows = published
+    repo = str(Path(__file__).resolve().parents[1])
+    with subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys, pathlib\n"
+            "from awi_datapipelinepublic_spark.sources.writers import publish_lock\n"
+            "with publish_lock(pathlib.Path(sys.argv[1])):\n"
+            "    print('held', flush=True)\n"
+            "    sys.stdin.read()\n",
+            str(path),
+        ],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+        env={**os.environ, "PYTHONPATH": repo},
+    ) as child:
+        try:
+            assert child.stdout.readline().strip() == "held"
+            with pytest.raises(ConcurrentPublishError):
+                overwrite_table(_mk(spark, 700, 705), str(path))
+            assert _rows(spark, path) == old_rows
+        finally:
+            child.kill()
+            child.wait()
+    new = _mk(spark, 800, 805)
+    overwrite_table(new, str(path))
+    assert _rows(spark, path) == sorted((r["pk"], r["d"]) for r in new.collect())
 
 
 def test_merge_into_table_publish_lock(spark, tmp_path):
-    """Catalog-merge twin of the path writer's lock: a FRESH foreign
-    lock refuses the merge (no staging table created, base untouched);
-    a STALE one is taken over and the merge lands. Reference semantics:
-    the per-type serialized Cloud Functions (main.py:39-41)."""
-    import os
-    import time
-
+    """Catalog-merge twin of the path writer's lock: while another
+    writer holds the table's lock the merge is refused (no staging
+    table created, base untouched); once it releases, the merge lands.
+    Reference semantics: the per-type serialized Cloud Functions
+    (main.py:39-41)."""
     from awi_datapipelinepublic_spark.operators.merge import (
         _table_location,
         merge_into_table,
@@ -912,18 +760,16 @@ def test_merge_into_table_publish_lock(spark, tmp_path):
     b1 = spark.createDataFrame([(1, dt.date(2024, 1, 1))], "pk long, d date")
     merge_into_table(spark, table, b1, "d", partition_by_month=False)
     loc = _table_location(spark, table)
-    lock = loc.parent / f".{loc.name}.lock"
-    lock.write_text("pid=99999 token=foreign\n")
     b2 = spark.createDataFrame([(2, dt.date(2024, 2, 1))], "pk long, d date")
-    with pytest.raises(ConcurrentPublishError):
-        merge_into_table(spark, table, b2, "d", partition_by_month=False)
+    with writers.publish_lock(loc):
+        with pytest.raises(ConcurrentPublishError):
+            merge_into_table(spark, table, b2, "d", partition_by_month=False)
     assert not spark.catalog.tableExists(f"{table}__staging")
     assert [r["pk"] for r in spark.table(table).collect()] == [1]
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
     merge_into_table(spark, table, b2, "d", partition_by_month=False)
     assert sorted(r["pk"] for r in spark.table(table).collect()) == [1, 2]
-    assert not lock.exists(), "lock released after the catalog merge"
+    with writers.publish_lock(loc):
+        pass  # released after the catalog merge: a fresh lock acquires
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
@@ -957,16 +803,15 @@ def test_compaction_under_merge_pressure_property(spark, tmp_path_factory, data)
     expected = _merge_expected(batches)
     assert _rows(spark, path) == expected
     # compaction refuses while a (simulated) merge holds the lock
-    lock = path.parent / f".{path.name}.lock"
-    lock.write_text("pid=9 token=merge-in-flight\n")
-    with pytest.raises(ConcurrentPublishError):
-        compact_table(spark, str(path))
-    lock.unlink()
+    with writers.publish_lock(path):
+        with pytest.raises(ConcurrentPublishError):
+            compact_table(spark, str(path))
     n_files = compact_table(spark, str(path))
     assert n_files == 1, "tiny table must compact to the 1-file target"
     assert len(list(Path(str(path) + "/").rglob("*.parquet"))) == 1
     assert _rows(spark, path) == expected, "compaction preserves content"
-    assert not lock.exists()
+    with writers.publish_lock(path):
+        pass  # released after compaction: a fresh lock acquires
 
 
 def _rollup_refresh(spark, base_path, rollup_path, since):
@@ -1052,8 +897,7 @@ def test_rollup_refresh_base_scan_is_partition_pruned(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round 11: ADVICE regressions — rollup bootstrap/locking, heartbeat
-# self-healing, takeover-restore race.
+# Rollup bootstrap and locking.
 # ---------------------------------------------------------------------------
 
 
@@ -1077,9 +921,10 @@ def test_rollup_incremental_without_stored_rollup_rebuilds_full(spark, tmp_path)
 
 
 def test_rollup_refresh_holds_publish_lock(spark, tmp_path):
-    """Two concurrent refreshes of one rollup must serialize: a FRESH
-    foreign lock refuses the whole read-merge-publish (the unlocked
-    read-then-publish interleave would lose one refresh)."""
+    """Two concurrent refreshes of one rollup must serialize: while
+    another writer holds the rollup's lock the whole read-merge-publish
+    is refused (the unlocked read-then-publish interleave would lose
+    one refresh)."""
     from awi_datapipelinepublic_spark.operators.merge import merge_into_path
     from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
 
@@ -1089,170 +934,12 @@ def test_rollup_refresh_holds_publish_lock(spark, tmp_path):
         spark, base_path, spark.createDataFrame(rows, "pk long, d date"), "d"
     )
     rollup_path = tmp_path / "rollup"
-    lock = rollup_path.parent / f".{rollup_path.name}.lock"
-    lock.write_text("pid=9 token=other-refresh\n")
-    with pytest.raises(ConcurrentPublishError):
-        _rollup_refresh(spark, base_path, str(rollup_path), None)
+    with writers.publish_lock(rollup_path):
+        with pytest.raises(ConcurrentPublishError):
+            _rollup_refresh(spark, base_path, str(rollup_path), None)
     assert not rollup_path.exists(), "refused refresh must not publish"
-    lock.unlink()
     _rollup_refresh(spark, base_path, str(rollup_path), None)
-    assert not lock.exists(), "lock released after the refresh"
+    with writers.publish_lock(rollup_path):
+        pass  # released after the refresh: a fresh lock acquires
     got = {r["_merge_month"]: r["n"] for r in spark.read.parquet(str(rollup_path)).collect()}
     assert got == {"2024-01": 3}
-
-
-def test_heartbeat_self_heals_missing_lock(tmp_path):
-    """A mistaken takeover that renamed a LIVE holder's lock away must
-    be healed: the holder's next beat O_EXCL-recreates the lock with
-    its own token, so later acquirers still see the table held."""
-    import time
-
-    target = tmp_path / "t"
-    lock, token = writers._acquire_publish_lock(target)
-    with writers._LockHeartbeat(lock, token, interval=0.05) as hb:
-        lock.unlink()  # simulate the mistaken takeover
-        deadline = time.time() + 3
-        while not lock.exists() and time.time() < deadline:
-            time.sleep(0.05)
-        assert lock.exists(), "heartbeat must recreate the missing lock"
-        assert f"token={token}" in lock.read_text()
-        assert not hb.lost
-    writers._release_publish_lock(lock, token)
-    assert not lock.exists()
-
-
-def test_heartbeat_flags_usurped_lock_and_publish_refuses(spark, tmp_path):
-    """If a usurper's FRESH lock beats the heartbeat's recreate, the
-    original holder must not flip the pointer over the usurper's
-    publish: ``lost`` flips True and _publish_locked raises."""
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import (
-        ConcurrentPublishError,
-        _publish_locked,
-    )
-
-    target = tmp_path / "t"
-    lock, token = writers._acquire_publish_lock(target)
-    df = spark.createDataFrame([(1,)], "pk long")
-    with writers._LockHeartbeat(lock, token, interval=0.05) as hb:
-        lock.write_text("pid=2 token=usurper\n")  # replaced, not just touched
-        lock.unlink()
-        lock.write_text("pid=2 token=usurper\n")  # fresh foreign lock wins
-        deadline = time.time() + 3
-        while not hb.lost and time.time() < deadline:
-            time.sleep(0.05)
-        assert hb.lost, "heartbeat must detect the usurper's fresh lock"
-        with pytest.raises(ConcurrentPublishError):
-            _publish_locked(df, target, None, 1, heartbeat=hb)
-    assert not target.exists(), "no pointer flip after a lost lock"
-    writers._release_publish_lock(lock, "usurper")
-
-
-def test_takeover_restore_race_preserves_holder_inode(tmp_path, monkeypatch):
-    """Third-writer window: a stale-looking lock is renamed to the
-    claim, found live, and the os.link restore loses to a third
-    writer's fresh O_EXCL lock. The claim (= the live holder's only
-    inode) must SURVIVE — unlinking it would leave the holder and the
-    third writer publishing concurrently."""
-    import os
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
-
-    target = tmp_path / "t"
-    lock = tmp_path / ".t.lock"
-    lock.write_text("pid=1 token=holder\n")
-    stale = time.time() - (writers._LOCK_STALE_SECONDS + 60)
-    os.utime(lock, (stale, stale))
-
-    real_rename = os.rename
-
-    def heartbeat_then_third_writer(src, dst):
-        os.utime(src)  # holder's heartbeat fires: the lock is LIVE
-        real_rename(src, dst)
-        lock.write_text("pid=3 token=third\n")  # third writer lands in the window
-
-    monkeypatch.setattr(writers.os, "rename", heartbeat_then_third_writer)
-    with pytest.raises(ConcurrentPublishError):
-        writers._acquire_publish_lock(target)
-    monkeypatch.undo()
-    claims = list(tmp_path.glob(".t.lock.claim-*"))
-    assert len(claims) == 1, "holder's inode must survive at the claim name"
-    assert "token=holder" in claims[0].read_text()
-    assert "token=third" in lock.read_text(), "third writer's lock untouched"
-
-
-# Round 12: ADVICE regression — a lost-heartbeat abort must not leave
-# a _SUCCESS-complete refused snapshot that recovery would publish.
-
-
-def test_lost_heartbeat_abort_removes_refused_snapshot(spark, tmp_path):
-    """After a takeover abort, the refused vdir must be gone (not a
-    recoverable snapshot): recover_table on the bare table dir must
-    find nothing to repoint to, and a later clean publish must win."""
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import (
-        ConcurrentPublishError,
-        _publish_locked,
-    )
-
-    target = tmp_path / "t"
-    lock, token = writers._acquire_publish_lock(target)
-    df = spark.createDataFrame([(1,)], "pk long")
-    with writers._LockHeartbeat(lock, token, interval=0.05) as hb:
-        lock.unlink()
-        lock.write_text("pid=2 token=usurper\n")
-        deadline = time.time() + 3
-        while not hb.lost and time.time() < deadline:
-            time.sleep(0.05)
-        assert hb.lost
-        with pytest.raises(ConcurrentPublishError):
-            _publish_locked(df, target, None, 3, heartbeat=hb)
-    writers._release_publish_lock(lock, "usurper")
-    assert not target.exists(), "no pointer flip after a lost lock"
-    refused = [
-        d
-        for d in tmp_path.glob(".t.v-*")
-        if (d / "_SUCCESS").exists()
-    ]
-    assert refused == [], "refused snapshot must not be recovery-publishable"
-    writers.recover_table(str(target))
-    assert not target.exists(), "recovery must not resurrect the refused write"
-
-
-def test_lost_heartbeat_abort_in_legacy_migration_keeps_legacy_visible(
-    spark, tmp_path
-):
-    """Takeover abort on a pre-versioning plain-dir table: the refused
-    vdir is removed BEFORE/AFTER the legacy rename, so recovery lands
-    on the legacy data, never the refused snapshot."""
-    import time
-
-    from awi_datapipelinepublic_spark.sources.writers import (
-        ConcurrentPublishError,
-        _publish_locked,
-    )
-
-    target = tmp_path / "t"
-    spark.createDataFrame([(10,)], "pk long").write.parquet(str(target))
-    assert target.exists() and not target.is_symlink()
-
-    lock, token = writers._acquire_publish_lock(target)
-    df = spark.createDataFrame([(99,)], "pk long")
-    with writers._LockHeartbeat(lock, token, interval=0.05) as hb:
-        lock.unlink()
-        lock.write_text("pid=2 token=usurper\n")
-        deadline = time.time() + 3
-        while not hb.lost and time.time() < deadline:
-            time.sleep(0.05)
-        assert hb.lost
-        with pytest.raises(ConcurrentPublishError):
-            _publish_locked(df, target, None, 3, heartbeat=hb)
-    writers._release_publish_lock(lock, "usurper")
-    writers.recover_table(str(target))
-    rows = spark.read.parquet(str(target)).collect()
-    assert [r["pk"] for r in rows] == [10], (
-        "recovery must surface the legacy data, not the refused snapshot"
-    )
