@@ -4,6 +4,7 @@ from awi_datapipelinepublic_spark.functions.cleaning import (
     CONVERTERS,
     apply_converters,
     cast_to_schema,
+    clean_to_schema,
     null_normalize,
     strip_excel,
 )
@@ -20,6 +21,7 @@ __all__ = [
     "CONVERTERS",
     "apply_converters",
     "cast_to_schema",
+    "clean_to_schema",
     "null_normalize",
     "strip_excel",
     "doc_fingerprint",

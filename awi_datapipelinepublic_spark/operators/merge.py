@@ -32,11 +32,16 @@ def merge_cutoff(new_batch: DataFrame, date_col: str):
     return new_batch.agg(F.min(date_col).alias("mindate")).first()["mindate"]
 
 
+# ``cutoff`` default: the caller did not observe MIN(date_col), so it is
+# computed here. None is an observed value: the batch has no dated row.
+COMPUTE_CUTOFF = object()
+
+
 def merge_time_window(
     base: DataFrame,
     new_batch: DataFrame,
     date_col: str,
-    cutoff=None,
+    cutoff=COMPUTE_CUTOFF,
     allow_schema_evolution: bool = False,
 ) -> DataFrame:
     """Pure logical-plan form of the merge: callers that own storage
@@ -46,6 +51,11 @@ def merge_time_window(
     drops them — reference config.py:138) and NULL < cutoff is NULL →
     filtered, matching BigQuery's behavior for base rows.
 
+    ``cutoff`` is MIN(new.date_col) when the caller already has it (e.g.
+    observed on the write that produced the batch); left out, it is
+    computed with :func:`merge_cutoff`. A None cutoff means an empty
+    batch: the merge is the identity on base.
+
     ``allow_schema_evolution`` is the Delta ``mergeSchema`` analog: a
     batch may ADD columns (history reads NULL for them) or OMIT
     columns (the batch's rows read NULL) — name-based union padding,
@@ -54,10 +64,9 @@ def merge_time_window(
     reference pipeline casts every batch to the declared schema before
     merging, so a mismatch there is a data bug and must stay loud.
     """
-    if cutoff is None:
+    if cutoff is COMPUTE_CUTOFF:
         cutoff = merge_cutoff(new_batch, date_col)
     if cutoff is None:
-        # Empty new batch: merge is the identity on base.
         return base
     return base.filter(F.col(date_col) < F.lit(cutoff)).unionByName(
         new_batch, allowMissingColumns=allow_schema_evolution
@@ -71,6 +80,7 @@ def merge_into_path(
     date_col: str,
     partition_by_month: bool = True,
     allow_schema_evolution: bool = False,
+    cutoff=COMPUTE_CUTOFF,
 ) -> None:
     """Storage-level merge: read base, merge, atomic-publish back
     (writers.overwrite_table — versioned snapshot + pointer flip).
@@ -78,12 +88,14 @@ def merge_into_path(
     Partitioning by month(date_col) makes both sides of the merge
     cheap: the ``< cutoff`` filter prunes partitions at scan time, and
     the rewrite only produces files for months ≥ cutoff plus
-    pass-through of older months. ``allow_schema_evolution`` passes
-    through to :func:`merge_time_window` (added/omitted batch columns
-    pad with NULLs instead of failing the union).
+    pass-through of older months. ``allow_schema_evolution`` and
+    ``cutoff`` pass through to :func:`merge_time_window` (added/omitted
+    batch columns pad with NULLs instead of failing the union). An
+    empty batch (None cutoff) over an existing base publishes nothing.
     """
     from pathlib import Path
 
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
     from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
 
     # Crash recovery FIRST: a kill inside overwrite_table's one-time
@@ -98,11 +110,15 @@ def merge_into_path(
     if partition_by_month:
         new_batch = new_batch.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
     if Path(base_path).exists():
-        base = spark.read.parquet(base_path)
+        if cutoff is COMPUTE_CUTOFF:
+            cutoff = merge_cutoff(new_batch, date_col)
+        if cutoff is None:
+            return
+        base = read_snapshot(spark, base_path)
         if partition_by_month and "_merge_month" not in base.columns:
             base = base.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
         merged = merge_time_window(
-            base, new_batch, date_col, allow_schema_evolution=allow_schema_evolution
+            base, new_batch, date_col, cutoff, allow_schema_evolution=allow_schema_evolution
         )
     else:
         merged = new_batch
@@ -387,6 +403,7 @@ def refresh_monthly_rollup(
     """
     from pathlib import Path
 
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
     from awi_datapipelinepublic_spark.sources.writers import (
         _publish_locked,
         publish_lock,
@@ -408,12 +425,12 @@ def refresh_monthly_rollup(
             # since_month and silently truncate all history. Fall
             # back to a full rebuild from the unfiltered base.
             since_month = None
-        base = spark.read.parquet(base_path)
+        base = read_snapshot(spark, base_path)
         if since_month is not None:
             base = base.filter(F.col("_merge_month") >= F.lit(since_month))
         fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
         if since_month is not None:
-            old = spark.read.parquet(rollup_path)
+            old = read_snapshot(spark, rollup_path)
             merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
         else:
             merged = fresh

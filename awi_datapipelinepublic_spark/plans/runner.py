@@ -18,14 +18,13 @@ import threading
 import weakref
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from awi_datapipelinepublic_spark.operators.merge import merge_into_path
 from awi_datapipelinepublic_spark.plans.spec import PipelineSpec
-from awi_datapipelinepublic_spark.sources.readers import read_csv, read_excel_sheets
+from awi_datapipelinepublic_spark.sources.readers import read_csv, read_excel_sheets, read_snapshot
 from awi_datapipelinepublic_spark.sources.schema import load_schema_json
 from awi_datapipelinepublic_spark.sources.writers import quarantine, write_parquet
-from pyspark.sql import functions as F
 
 
 def run_clean(
@@ -40,10 +39,11 @@ def run_clean(
     our own stages).
 
     Pass a ``pyspark.sql.Observation`` to collect data-quality
-    counters (rows_in, null_date_rows) as a free rider on the staging
-    write — ``observe`` accumulates during the existing action, no
-    second scan, which is the only affordable way to count at 100 TB.
-    Read ``observation.get`` after this returns.
+    counters (rows_in, null_date_rows) and the merge cutoff (min_date,
+    MIN of the merge-date column) as a free rider on the staging write
+    — ``observe`` accumulates during the existing action, no second
+    scan, which is the only affordable way to count at 100 TB. Read
+    ``observation.get`` after this returns.
     """
     fields = load_schema_json(spec.schema_file)
     if spec.is_excel:
@@ -55,12 +55,13 @@ def run_clean(
     else:
         df = read_csv(spark, file_path, fields, spec.converters)
     if observation is not None:
+        date = F.col(spec.date_col)
         df = df.observe(
             observation,
             F.count(F.lit(1)).alias("rows_in"),
-            F.sum(
-                F.when(F.col(spec.date_col).isNull(), 1).otherwise(0)
-            ).alias("null_date_rows"),
+            F.sum(F.when(date.isNull(), 1).otherwise(0)).alias("null_date_rows"),
+            # MIN skips NULLs, so this is MIN over the rows kept below.
+            F.min(date).alias("min_date"),
         )
     # Rows with NULL merge-date can never participate in the time-window
     # merge — dropped exactly like the reference (config.py:138).
@@ -81,14 +82,20 @@ def run_load(spark: SparkSession, spec: PipelineSpec) -> None:
 
 
 def run_file(spark: SparkSession, spec: PipelineSpec, file_path: str) -> None:
-    """Full chain for one dropped file, with quarantine-on-failure."""
+    """Full chain for one dropped file, with quarantine-on-failure. The
+    staged frame ``run_clean`` returns is merged as is, with the cutoff
+    observed on the staging write: the load launches no job of its own
+    before the merge's write."""
+    clean = Observation()
     try:
-        run_clean(spark, spec, file_path)
+        staged = run_clean(spark, spec, file_path, observation=clean)
     except Exception:
         if spec.error_dir:
             quarantine(file_path, spec.error_dir)
         raise
-    run_load(spark, spec)
+    merge_into_path(
+        spark, spec.base_table_path, staged, spec.date_col, cutoff=clean.get["min_date"]
+    )
     # Consumed input is removed post-commit (reference drop_source,
     # config.py:176) so re-runs are idempotent.
     Path(file_path).unlink(missing_ok=True)
@@ -198,7 +205,7 @@ def refresh_view(
     table-backed lookup is read fresh on every refresh."""
     if not spec.view_name:
         return None
-    base = spark.read.parquet(spec.base_table_path)
+    base = read_snapshot(spark, spec.base_table_path)
     if "_merge_month" in base.columns:
         base = base.drop("_merge_month")
     dims = {name: _local_dim(dim) for name, dim in (dims or {}).items()}
@@ -213,4 +220,4 @@ def register_base_tables(spark: SparkSession, specs: dict[str, PipelineSpec]) ->
     for spec in specs.values():
         p = Path(spec.base_table_path)
         if p.exists():
-            spark.read.parquet(str(p)).createOrReplaceTempView(spec.name)
+            read_snapshot(spark, str(p)).createOrReplaceTempView(spec.name)

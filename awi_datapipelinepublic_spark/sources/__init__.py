@@ -5,7 +5,12 @@ from awi_datapipelinepublic_spark.sources.schema import (
     load_schema_json,
     to_struct_type,
 )
-from awi_datapipelinepublic_spark.sources.readers import read_csv, read_excel_sheets, read_table
+from awi_datapipelinepublic_spark.sources.readers import (
+    read_csv,
+    read_excel_sheets,
+    read_snapshot,
+    read_table,
+)
 from awi_datapipelinepublic_spark.sources.writers import (
     overwrite_table,
     write_csv,
@@ -18,6 +23,7 @@ __all__ = [
     "to_struct_type",
     "read_csv",
     "read_excel_sheets",
+    "read_snapshot",
     "read_table",
     "overwrite_table",
     "write_csv",

@@ -4,17 +4,20 @@
 ``pd.read_csv(converters=..., parse_dates=..., usecols=...)``
 (reference: config.py:131-137): schema-declared columns only (no
 inference), per-column converter expressions, lenient DATE parsing.
-All transforms are Column expressions — they stay inside whole-stage
-codegen; nothing here is a Python UDF.
+All transforms are built-in expressions — they stay inside whole-stage
+codegen; nothing here is a Python UDF. ``read_snapshot`` reads a table
+published by ``writers.overwrite_table`` with the schema recorded in
+its snapshot, so no footer-inference job runs.
 """
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from awi_datapipelinepublic_spark.functions.cleaning import apply_converters, cast_to_schema
+from awi_datapipelinepublic_spark.functions.cleaning import clean_to_schema
 from awi_datapipelinepublic_spark.sources.schema import (
     TABLE_SCHEMAS,
     date_columns,
@@ -34,6 +37,27 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in TABLE_SCHEMAS:
         reader = reader.schema(TABLE_SCHEMAS[name])
     return reader.parquet(str(Path(sf_dir) / f"{name}.parquet"))
+
+
+# Each snapshot written by writers.overwrite_table records the schema of
+# the frame it holds; Spark's file listing skips ``_``-prefixed names
+# (without ``=``), so the record is never read as data.
+SNAPSHOT_SCHEMA = "_schema.json"
+
+
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """Read a Parquet table published by ``writers.overwrite_table``
+    with the schema recorded in its snapshot, so no footer-inference job
+    runs. The pointer is resolved once, so the schema and the listed
+    files come from the same snapshot. A table without the record (a
+    legacy plain dir or a foreign table) is read with inference.
+    """
+    snapshot = Path(path).resolve()
+    try:
+        schema = (snapshot / SNAPSHOT_SCHEMA).read_text()
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(T.StructType.fromJson(json.loads(schema))).parquet(str(snapshot))
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,6 +105,8 @@ def read_csv(
     3. empty string → NULL ('' is never data; config.py:143)
     4. cast to declared types; DATE columns via lenient to_date
        (invalid → NULL, the errors='coerce' analog; config.py:139-142)
+    Steps 1-4 are one projection (``clean_to_schema``); building it
+    launches no Spark job.
     """
     raw_schema = string_read_struct(fields)
     df = (
@@ -88,17 +114,7 @@ def read_csv(
         .options(header=True, multiLine=True, escape='"')
         .csv(path)
     )
-    # usecols: prune to declared schema columns (config.py:135). With a
-    # declared schema Spark already reads only these, but an explicit
-    # select keeps column order canonical.
-    df = df.select(*[f["name"] for f in fields])
-    if converters:
-        df = apply_converters(df, converters)
-    # '' → NULL for every column — applied pre-cast like config.py:143.
-    df = df.select(
-        *[F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c) for c in df.columns]
-    )
-    return cast_to_schema(df, to_struct_type(fields), lenient_dates=date_columns(fields))
+    return clean_to_schema(df, to_struct_type(fields), converters, date_columns(fields))
 
 
 def read_jsonl(spark: SparkSession, path: str, fields: list[dict]) -> DataFrame:

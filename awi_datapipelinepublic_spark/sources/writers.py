@@ -23,6 +23,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 
+from awi_datapipelinepublic_spark.sources.readers import SNAPSHOT_SCHEMA, read_snapshot
+
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     w = df.write.mode("overwrite")
@@ -146,7 +148,7 @@ def read_version(spark, path: str, version: int) -> "DataFrame":
     that was never written or has been retention-GC'd."""
     for n, d in list_versions(path):
         if n == version:
-            return spark.read.parquet(d)
+            return read_snapshot(spark, d)
     raise KeyError(
         f"version {version} of {path} not retained "
         f"(have: {[n for n, _ in list_versions(path)]})"
@@ -210,6 +212,9 @@ def _publish_locked(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(str(vdir))
+    # Spark reads a declared file schema back all-nullable with partition
+    # columns last, as inference does, so the frame's schema is recorded.
+    (vdir / SNAPSHOT_SCHEMA).write_text(df.schema.json())
     (vdir / "_SUCCESS").touch()  # belt-and-braces if the committer marker is off
     if migrate_legacy:
         # Pre-versioning plain-dir table: fold it into the version
@@ -255,7 +260,7 @@ def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: lis
     with publish_lock(target):
         total_bytes = sum(f.stat().st_size for f in target.rglob("*.parquet"))
         n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        df = spark.read.parquet(path)
+        df = read_snapshot(spark, path)
         if partition_by:
             compacted = df.repartition(n_files, *[df[c] for c in partition_by])
         else:

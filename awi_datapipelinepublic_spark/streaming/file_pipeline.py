@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from awi_datapipelinepublic_spark.functions.cleaning import apply_converters, cast_to_schema
+from awi_datapipelinepublic_spark.functions.cleaning import clean_to_schema
 from awi_datapipelinepublic_spark.operators.merge import merge_into_path
 from awi_datapipelinepublic_spark.plans.spec import PipelineSpec
 from awi_datapipelinepublic_spark.sources.schema import (
@@ -26,16 +26,6 @@ from awi_datapipelinepublic_spark.sources.schema import (
     string_read_struct,
     to_struct_type,
 )
-
-
-def _clean_batch(df: DataFrame, spec: PipelineSpec, fields: list[dict]) -> DataFrame:
-    if spec.converters:
-        df = apply_converters(df, spec.converters)
-    df = df.select(
-        *[F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c) for c in df.columns]
-    )
-    df = cast_to_schema(df, to_struct_type(fields), lenient_dates=date_columns(fields))
-    return df.filter(F.col(spec.date_col).isNotNull())
 
 
 def stream_pipeline(
@@ -60,30 +50,31 @@ def stream_pipeline(
         .csv(spec.landing_dir)
     )
 
+    schema, lenient = to_struct_type(fields), date_columns(fields)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = _clean_batch(batch_df, spec, fields)
-        # Without an emitter, the empty probe stays the cheap
-        # first-row isEmpty; with one, the count both gates and rides
-        # in the event payload (one extra pass over the micro-batch —
-        # O(batch), paid only when events are wanted).
-        if on_complete is None:
-            if cleaned.isEmpty():
-                return
-            merge_into_path(
-                batch_df.sparkSession, spec.base_table_path, cleaned, spec.date_col
-            )
-            return
-        n = cleaned.count()
+        # Same clean projection as the batch reader (sources.read_csv).
+        cleaned = clean_to_schema(batch_df, schema, spec.converters, lenient).filter(
+            F.col(spec.date_col).isNotNull()
+        )
+        # One aggregate pass answers all three questions: emptiness,
+        # the event's row count, and the merge cutoff MIN(date_col),
+        # which merge_into_path would otherwise compute with a job of
+        # its own. The merge re-scans the micro-batch for its write.
+        cutoff, n = cleaned.agg(F.min(spec.date_col), F.count(F.lit(1))).first()
         if n == 0:
             return
-        merge_into_path(batch_df.sparkSession, spec.base_table_path, cleaned, spec.date_col)
-        from awi_datapipelinepublic_spark.streaming.sinks import completion_message
-
-        on_complete(
-            batch_df.sparkSession,
-            completion_message(spec.name, batch_id, n),
-            batch_id,
+        merge_into_path(
+            batch_df.sparkSession, spec.base_table_path, cleaned, spec.date_col, cutoff=cutoff
         )
+        if on_complete is not None:
+            from awi_datapipelinepublic_spark.streaming.sinks import completion_message
+
+            on_complete(
+                batch_df.sparkSession,
+                completion_message(spec.name, batch_id, n),
+                batch_id,
+            )
 
     writer = raw.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
     if available_now:

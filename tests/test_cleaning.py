@@ -1,10 +1,12 @@
 """Clean-stage operator tests: the reference's dirt classes
 (SURVEY.md §5.2) against functions/cleaning.py + sources/readers.py."""
 
+import datetime as dt
 import json
 import sys
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -324,3 +326,88 @@ def test_xlsx_phonetic_runs_excluded_from_strings(tmp_path):
     header, rows = read_xlsx(path, "S1")
     assert header == ["city"]
     assert rows == [["東京"], ["大阪"]]
+
+
+# FIXTURES.md §A2 dirt classes, one row each: Excel ="…" quoting, empty
+# strings, an unparseable date, a NULL merge date, an unparseable
+# non-merge date, and a clean row.
+_DIRTY_HDR = "AgencyNumber,PolicyNumber,PolicyExpiryDate,CommissionAmt,SELLER__,LeaseIndicator\n"
+_DIRTY_ROWS = (
+    '"=""1234""","=""P-1""",2024-01-15,10.5,3,true\n'
+    ',P-2,2024-02-01,,,\n'
+    '5678,P-3,not-a-date,7.25,9,false\n'
+    '9012,P-4,,1.0,1,true\n'
+    '=3456=,P-5,2024-03-31,2.5,,false\n'
+)
+
+
+def test_read_csv_and_streaming_clean_agree_on_dirt_classes(spark, tmp_path, monkeypatch):
+    """The batch reader and the streaming micro-batch clean share one
+    projection: identical schema and rows on every dirt class, after
+    the merge-date filter both paths apply."""
+    from awi_datapipelinepublic_spark.plans.spec import PipelineSpec
+    from awi_datapipelinepublic_spark.streaming import file_pipeline
+
+    schema_file = tmp_path / "renewals.json"
+    schema_file.write_text(json.dumps(FIELDS))
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "drop.csv").write_text(_DIRTY_HDR + _DIRTY_ROWS)
+    converters = {"AgencyNumber": "strip_excel", "PolicyNumber": "strip_excel"}
+    spec = PipelineSpec(
+        name="renewals", schema_file=str(schema_file), date_col="PolicyExpiryDate",
+        landing_dir=str(landing), staging_dir=str(tmp_path / "s"),
+        base_table_path=str(tmp_path / "b"), converters=converters,
+    )
+    seen = []
+
+    def capture(spark_, base_path, batch, date_col, cutoff):
+        seen.append((batch.schema, sorted(map(tuple, batch.collect()), key=repr), cutoff))
+
+    monkeypatch.setattr(file_pipeline, "merge_into_path", capture)
+    q = file_pipeline.stream_pipeline(spark, spec, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert not q.isActive
+
+    batch = read_csv(spark, str(landing / "drop.csv"), FIELDS, converters).filter(
+        F.col("PolicyExpiryDate").isNotNull()
+    )
+    rows = sorted(map(tuple, batch.collect()), key=repr)
+    assert seen == [(batch.schema, rows, dt.date(2024, 1, 15))]
+    by_policy = {r[1]: r for r in rows}
+    assert set(by_policy) == {"P-1", "P-2", "P-5"}       # NULL / bad merge dates dropped
+    assert by_policy["P-1"][0] == "1234" and by_policy["P-5"][0] == "3456"
+    assert by_policy["P-2"][0] is None and by_policy["P-2"][3] is None   # '' → NULL
+
+
+def test_clean_projection_quotes_odd_column_names(spark, tmp_path):
+    """Declared names with a space and a backtick round-trip through the
+    SQL projection (converter and lenient date included), and building
+    the clean frame launches no Spark job."""
+    import uuid
+
+    fields = [
+        {"name": "Agency `No` x", "type": "STRING", "mode": "NULLABLE"},
+        {"name": "Expiry Date", "type": "DATE", "mode": "NULLABLE"},
+        {"name": "n`", "type": "INTEGER", "mode": "NULLABLE"},
+    ]
+    csv = tmp_path / "odd.csv"
+    csv.write_text('"Agency `No` x",Expiry Date,n`\n"=""7""",2024-05-06,3\n,nope,\n')
+    sc = spark.sparkContext
+    group = f"clean-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build clean frame")
+    try:
+        df = read_csv(spark, str(csv), fields, {"Agency `No` x": "strip_excel"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.columns == [f["name"] for f in fields]
+    assert [tuple(r) for r in df.collect()] == [("7", dt.date(2024, 5, 6), 3), (None, None, None)]
+
+
+def test_read_csv_unknown_converter_raises(spark, tmp_path):
+    csv = tmp_path / "r.csv"
+    csv.write_text(_DIRTY_HDR + _DIRTY_ROWS)
+    with pytest.raises(ValueError, match="unknown converter"):
+        read_csv(spark, str(csv), FIELDS, converters={"AgencyNumber": "__import__"})

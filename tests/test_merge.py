@@ -5,6 +5,7 @@ that covered it."""
 import datetime as dt
 import random
 import sys
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -943,3 +944,105 @@ def test_rollup_refresh_holds_publish_lock(spark, tmp_path):
         pass  # released after the refresh: a fresh lock acquires
     got = {r["_merge_month"]: r["n"] for r in spark.read.parquet(str(rollup_path)).collect()}
     assert got == {"2024-01": 3}
+
+
+# ---------------------------------------------------------------------------
+# Snapshot schema record: every published snapshot carries the schema its
+# files read back with, so readers declare it instead of inferring.
+# ---------------------------------------------------------------------------
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_snapshot_schema_equals_inference_on_merged_base(spark, tmp_path):
+    """A ``_merge_month``-partitioned base written by merge_into_path
+    reads with its recorded schema, launching no job, exactly as
+    inference reads it: names, types, nullability and column order,
+    and the same rows."""
+    from awi_datapipelinepublic_spark.sources.readers import SNAPSHOT_SCHEMA, read_snapshot
+
+    path = str(tmp_path / "base")
+    batch = spark.createDataFrame(
+        [(1, dt.date(2024, 1, 5), "a", 1.5, dt.datetime(2024, 1, 5, 8, 30)),
+         (2, dt.date(2024, 2, 9), None, None, None)],
+        "pk long NOT NULL, d date, v string, x double, ts timestamp",
+    ).filter(F.col("d").isNotNull())  # a non-nullable d in the frame's schema
+    merge_into_path(spark, path, batch, "d")
+    merge_into_path(
+        spark, path, spark.createDataFrame([(3, dt.date(2024, 2, 1), "c", 2.0, None)], batch.schema), "d"
+    )
+    assert (pathlib.Path(path).resolve() / SNAPSHOT_SCHEMA).exists()
+    sc = spark.sparkContext
+    group = f"snapshot-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "declared snapshot read")
+    try:
+        declared = read_snapshot(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []  # no inference job
+    inferred = spark.read.parquet(path)
+    assert declared.schema == inferred.schema
+    assert declared.columns[-1] == "_merge_month"
+    assert _sorted_rows(declared) == _sorted_rows(inferred)
+    assert {r["pk"] for r in declared.collect()} == {1, 3}
+
+
+def test_snapshot_reader_infers_legacy_table(spark, tmp_path):
+    """A plain Parquet dir with no schema record (legacy or foreign
+    table) is still read, by inference."""
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
+
+    path = str(tmp_path / "legacy")
+    _mk(spark, 0, 20).write.parquet(path)
+    got = read_snapshot(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert _rows(spark, path) == sorted((r["pk"], r["d"]) for r in got.collect())
+
+
+def test_read_version_keeps_the_schema_of_its_snapshot(spark, tmp_path):
+    """After a schema-evolving merge adds a column, the older snapshot
+    reads back with the old schema and the live table with the new
+    one, whose partition column moves behind the added column."""
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
+    from awi_datapipelinepublic_spark.sources.writers import list_versions, read_version
+
+    def month(df):
+        return df.withColumn("_merge_month", F.date_format("d", "yyyy-MM"))
+
+    path = str(tmp_path / "evolve")
+    base = spark.createDataFrame([(1, dt.date(2024, 1, 1), "a")], "pk long, d date, v string")
+    overwrite_table(month(base), path, partition_by=["_merge_month"], keep_versions=2)
+    widened = spark.createDataFrame(
+        [(2, dt.date(2024, 2, 1), "b", 7.5)], "pk long, d date, v string, score double"
+    )
+    merged = merge_time_window(
+        read_snapshot(spark, path), month(widened), "d", allow_schema_evolution=True
+    )
+    assert merged.columns[-1] == "score"
+    overwrite_table(merged, path, partition_by=["_merge_month"], keep_versions=2)
+    (old_v, old_dir), (new_v, _) = list_versions(path)
+    old, live = read_version(spark, path, old_v), read_snapshot(spark, path)
+    assert old.columns == ["pk", "d", "v", "_merge_month"]
+    assert old.schema == spark.read.parquet(old_dir).schema
+    assert live.columns == ["pk", "d", "v", "score", "_merge_month"]
+    assert live.schema == spark.read.parquet(path).schema
+    assert _sorted_rows(read_version(spark, path, new_v)) == _sorted_rows(live)
+    assert {r["pk"]: r["score"] for r in live.collect()} == {1: None, 2: 7.5}
+
+
+def test_snapshot_schema_record_is_never_data(spark, tmp_path):
+    """The ``_schema.json`` record is skipped by Spark's file listing,
+    for partitioned and plain snapshots, declared or inferred reads."""
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
+
+    plain, parted = str(tmp_path / "plain"), str(tmp_path / "parted")
+    overwrite_table(_mk(spark, 0, 30), plain)
+    merge_into_path(spark, parted, _mk(spark, 0, 30), "d")
+    for path in (plain, parted):
+        for df in (read_snapshot(spark, path), spark.read.parquet(path)):
+            files = {r[0] for r in df.select(F.input_file_name()).distinct().collect()}
+            assert files and all(f.endswith(".parquet") for f in files)
+            assert df.count() == 30

@@ -4,6 +4,7 @@ base table, with quarantine-on-failure (reference main.py:18-63)."""
 import json
 import sys
 import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -253,6 +254,97 @@ def test_refresh_view_reads_republished_parquet_dim_fresh(spark, tmp_path):
 
     assert refresh([("Calgary", "South")]) == ["South"]
     assert refresh([("Calgary", "Foothills")]) == ["Foothills"]
+
+
+def _job_counter(spark):
+    """(group id, count) for counting the Spark jobs started under a
+    job group; ``count`` first drains the listener bus so that every
+    finished action's job is registered."""
+    sc = spark.sparkContext
+    group = f"pipeline-test-{uuid.uuid4().hex}"
+
+    def count():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return group, count
+
+
+def test_warm_drop_launches_at_most_nine_jobs(spark, tmp_path, monkeypatch):
+    """A warm drop (run_file into an existing base, refresh_view of
+    RETENTION, noop materialize) launches at most 9 Spark jobs, none of
+    them before the staging write: the clean frame builds without a
+    job, the cutoff rides on the staging write, and the staged frame,
+    the base and the view's base are read with declared schemas."""
+    from awi_datapipelinepublic_spark.plans import runner
+
+    spec = _retention_spec(tmp_path)
+    dims = _python_row_dims(spark)
+
+    def drop(body):
+        run_file(spark, spec, _drop(spec, "renewals.csv", _REN_HDR + body))
+        view = runner.refresh_view(spark, spec, dims)
+        view.write.format("noop").mode("overwrite").save()
+        return view
+
+    drop(_REN_ROW + "1234,P-9,2023-03-01,2024-03-15,NB,true,,A,PC1,PC2,e,f,,Edmonton,T5J,,\n")
+    group, jobs = _job_counter(spark)
+    before_write, write_parquet = [], runner.write_parquet
+
+    def counting_write(df, path):
+        before_write.append(jobs())
+        write_parquet(df, path)
+
+    monkeypatch.setattr(runner, "write_parquet", counting_write)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "warm drop")
+    try:
+        view = drop("9999,P-2,2023-02-01,2024-02-15,XX,false,,C,PC1,ZZ,c,d,,Nowhere,T3A,7,\n")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert before_write == [0]
+    assert jobs() <= 9
+    # P-9 (2024-03-15) is restated by the drop's window; P-1 is older.
+    got = sorted((r["PolicyNumber"], r["Cancelled"]) for r in view.collect())
+    assert got == [("P-1", 0), ("P-2", 1)]
+
+
+def test_all_null_date_drop_leaves_base_unchanged(spark, tmp_path, monkeypatch):
+    """A drop whose every merge date is NULL observes a NULL cutoff: the
+    merge is the identity, computes no cutoff and runs no job, and the
+    base keeps its rows and its snapshot."""
+    from awi_datapipelinepublic_spark.operators import merge
+    from awi_datapipelinepublic_spark.plans import runner
+    from awi_datapipelinepublic_spark.sources.writers import list_versions
+
+    spec = _retention_spec(tmp_path)
+    run_file(spark, spec, _drop(spec, "renewals.csv", _REN_HDR + _REN_ROW))
+    before = sorted(map(tuple, spark.read.parquet(spec.base_table_path).collect()))
+    versions = list_versions(spec.base_table_path)
+
+    def no_cutoff(*args):
+        raise AssertionError("merge_cutoff must not run for an observed cutoff")
+
+    monkeypatch.setattr(merge, "merge_cutoff", no_cutoff)
+    group, jobs = _job_counter(spark)
+    merge_into_path = runner.merge_into_path
+
+    def grouped_merge(*args, **kwargs):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "merge")
+        try:
+            merge_into_path(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(runner, "merge_into_path", grouped_merge)
+    f = _drop(spec, "renewals.csv", _REN_HDR + "1234,P-5,2023-01-01,,NB,true,,R,,,,,,,,1,\n"
+              "1234,P-6,2023-01-01,not-a-date,NB,true,,R,,,,,,,,1,\n")
+    run_file(spark, spec, f)
+    assert jobs() == 0
+    assert not Path(f).exists()
+    assert list_versions(spec.base_table_path) == versions
+    assert sorted(map(tuple, spark.read.parquet(spec.base_table_path).collect())) == before
 
 
 def test_streaming_pipeline_available_now(spark, spec, tmp_path):
