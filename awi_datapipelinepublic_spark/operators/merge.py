@@ -11,11 +11,13 @@ batch's window are discarded (re-statement / late-correction
 semantics), older history is preserved untouched.
 
 Scale design: the base table is partitioned by month(date_col). The
-filter ``date_col < cutoff`` then becomes partition pruning — at
-100 TB a monthly batch merge rewrites only the affected partitions'
-worth of data plus the new batch, never the full history. The staged
-overwrite (sources/writers.py) handles Spark's read-then-overwrite
-restriction; on a Delta-enabled cluster the exact primitive is
+filter ``date_col < cutoff`` then becomes partition pruning on the
+read side. The publish does not prune yet: every merge republishes the
+whole base as a new versioned snapshot (sources/writers.py), the
+pass-through months included — perfbench's traced ingest reads
+``writers.useful_write_ratio`` 0.44 — so publish cost grows with the
+history, not the batch. A partition-scoped commit is ROADMAP
+direction 1; on a Delta-enabled cluster the exact primitive is
 ``replaceWhere(f"{date_col} >= '{cutoff}'")``.
 """
 
@@ -85,31 +87,34 @@ def merge_into_path(
     """Storage-level merge: read base, merge, atomic-publish back
     (writers.overwrite_table — versioned snapshot + pointer flip).
 
-    Partitioning by month(date_col) makes both sides of the merge
-    cheap: the ``< cutoff`` filter prunes partitions at scan time, and
-    the rewrite only produces files for months ≥ cutoff plus
-    pass-through of older months. ``allow_schema_evolution`` and
+    Partitioning by month(date_col) makes the read cheap: the
+    ``< cutoff`` filter prunes partitions at scan time. The publish
+    still rewrites the whole base — the batch's months and every older
+    month passed through — into the new snapshot (ROADMAP direction 1
+    scopes it to the owned months). ``allow_schema_evolution`` and
     ``cutoff`` pass through to :func:`merge_time_window` (added/omitted
     batch columns pad with NULLs instead of failing the union). An
     empty batch (None cutoff) over an existing base publishes nothing.
+    The base is read before the publish lock is taken: the lock refuses
+    an overlapping publish, and callers keep one writer per table.
     """
-    from pathlib import Path
-
     from awi_datapipelinepublic_spark.sources.readers import read_snapshot
-    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
+    from awi_datapipelinepublic_spark.sources.writers import local_path, overwrite_table, recover_table
 
+    target = local_path(base_path)
+    base_path = str(target)
     # Crash recovery FIRST: a kill inside overwrite_table's one-time
     # legacy-dir migration window leaves the pointer absent while a
     # complete snapshot exists. Without this, the exists() check below
     # reads the table as empty, the merge publishes new_batch alone,
     # and keep_versions GC then deletes the old snapshot — silent loss
-    # of all history. Mirrors merge_into_table's _recover_staged_swap.
+    # of all history.
     recover_table(base_path)
 
     part_cols = ["_merge_month"] if partition_by_month else None
     if partition_by_month:
         new_batch = new_batch.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
-    if Path(base_path).exists():
+    if target.exists():
         if cutoff is COMPUTE_CUTOFF:
             cutoff = merge_cutoff(new_batch, date_col)
         if cutoff is None:
@@ -125,49 +130,6 @@ def merge_into_path(
     overwrite_table(merged, base_path, partition_by=part_cols)
 
 
-def _table_location(spark, table: str):
-    """Managed-table directory under the session warehouse — used both
-    for orphan cleanup and as the anchor for the per-table publish
-    lock (a kernel flock on a warehouse-dir sibling file, so every
-    writer of the same catalog name contends on the same lock)."""
-    from pathlib import Path
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return Path(warehouse.removeprefix("file:")) / table.lower()
-
-
-def _clear_orphan_location(spark, table: str) -> None:
-    """Remove a managed-table location that has no catalog entry (see
-    merge_into_table — only possible with a non-persistent catalog)."""
-    if spark.catalog.tableExists(table):
-        return
-    import shutil
-
-    loc = _table_location(spark, table)
-    if loc.exists():
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def _recover_staged_swap(spark, table: str) -> None:
-    """Roll a crashed metastore swap forward: a surviving
-    ``{table}__staging`` entry means a previous merge fully
-    materialized its result but died before (or during) the
-    DROP+RENAME. The staging table IS the complete merged state —
-    finish the swap so the caller reads it, instead of stranding a
-    whole batch's merge. Idempotent; no-op when no staging entry
-    exists (an orphan staging *location* with no catalog entry is
-    handled by :func:`_clear_orphan_location` — dead data, not a
-    recoverable swap)."""
-    staging = f"{table}__staging"
-    if not spark.catalog.tableExists(staging):
-        return
-    if spark.catalog.tableExists(table):
-        spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    if "_merge_month" in spark.table(table).columns:
-        spark.sql(f"MSCK REPAIR TABLE {table}")
-
-
 def merge_into_table(
     spark,
     table: str,
@@ -178,81 +140,28 @@ def merge_into_table(
     """Catalog-backed twin of :func:`merge_into_path` — the production
     shape. The reference loads into a *warehouse dataset*, not a path
     (config.py:161-172: ``WRITE_TRUNCATE`` load + ``CREATE OR REPLACE
-    TABLE`` into a BigQuery dataset); here the merged base lands as a
-    managed table via ``saveAsTable`` and is read back with
-    ``spark.table(name)`` — so downstream view builders and the
-    ``spark.sql`` surface address tables by *name*, with the metastore
-    (not a path convention) carrying schema + partition spec.
+    TABLE`` into a BigQuery dataset); here view builders and
+    ``spark.sql`` address the merged base by *name*.
 
-    Same read-then-overwrite hazard as the path variant: the merged
-    plan reads the table it replaces, so the result is staged through a
-    temp table and swapped with a metastore rename (both sub-second
-    metadata ops at any scale; the data files move with the managed
-    table). On a Delta/Iceberg cluster the swap collapses to
-    ``INSERT OVERWRITE ... replaceWhere date_col >= cutoff`` — only the
-    affected partitions rewrite; the monthly partitioning below is what
-    makes that cheap.
+    The catalog is only a name over the path writer's files: the merge
+    publishes with :func:`merge_into_path` at the table's warehouse
+    location (snapshot + pointer flip under the publish lock), then
+    registers an EXTERNAL table over the pointer and refreshes its
+    files and partitions. A crash before that catalog sync is repaired
+    by the next call. ``DROP TABLE`` removes the name and keeps the
+    data, so the next merge into the name, in this session or a new
+    one, keeps the history.
     """
-    from awi_datapipelinepublic_spark.sources.writers import publish_lock
+    from awi_datapipelinepublic_spark.sources.layout import table_location
 
+    loc = table_location(spark, table)
+    merge_into_path(spark, str(loc), new_batch, date_col, partition_by_month=partition_by_month)
+    spark.sql(f"CREATE TABLE IF NOT EXISTS {table} USING parquet LOCATION '{loc}'")
+    spark.sql(f"REFRESH TABLE {table}")
     if partition_by_month:
-        new_batch = new_batch.withColumn(
-            "_merge_month", F.date_format(F.col(date_col), "yyyy-MM")
-        )
-    # Same publish lock as the path writer (writers.py), keyed on the
-    # managed-table location so every writer of this catalog name
-    # contends on one file: without it two concurrent catalog merges
-    # race the `__staging` create/DROP/RENAME and one batch's merge
-    # silently vanishes. Held across recovery + read + staging + swap;
-    # the kernel frees it if this process dies mid-merge.
-    with publish_lock(_table_location(spark, table)):
-        _merge_into_table_locked(spark, table, new_batch, date_col, partition_by_month)
-
-
-def _merge_into_table_locked(
-    spark,
-    table: str,
-    new_batch: DataFrame,
-    date_col: str,
-    partition_by_month: bool,
-) -> None:
-    # Crash recovery first: a cataloged staging table is a fully
-    # materialized merge whose swap never finished — complete it.
-    _recover_staged_swap(spark, table)
-    # In-memory catalogs (tests, ad-hoc sessions) forget table entries
-    # across sessions while their warehouse dirs persist; Spark then
-    # refuses the managed-table create (LOCATION_ALREADY_EXISTS). The
-    # catalog is the source of truth: a location with no entry is a dead
-    # session's garbage — clear it. A Hive/Glue metastore never hits
-    # this path (entries persist, DROP removes data).
-    _clear_orphan_location(spark, table)
-    _clear_orphan_location(spark, f"{table}__staging")
-    if spark.catalog.tableExists(table):
-        base = spark.table(table)
-        if partition_by_month and "_merge_month" not in base.columns:
-            base = base.withColumn(
-                "_merge_month", F.date_format(F.col(date_col), "yyyy-MM")
-            )
-        merged = merge_time_window(base, new_batch, date_col)
-        # Stage: fully materialize under a temp name before touching the
-        # target (Spark cannot overwrite a table the plan reads).
-        staging = f"{table}__staging"
-        w = merged.write.mode("overwrite")
-        if partition_by_month:
-            w = w.partitionBy("_merge_month")
-        w.format("parquet").saveAsTable(staging)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        if partition_by_month:
-            # The rename moves the managed directory but catalog
-            # partition entries keep their pre-rename locations;
-            # re-discover them from the moved directory layout.
-            spark.sql(f"MSCK REPAIR TABLE {table}")
-    else:
-        w = new_batch.write.mode("overwrite")
-        if partition_by_month:
-            w = w.partitionBy("_merge_month")
-        w.format("parquet").saveAsTable(table)
+        # The catalog tracks partitions of a LOCATION table: months the
+        # merge added must be registered, months it emptied dropped.
+        spark.sql(f"MSCK REPAIR TABLE {table} SYNC PARTITIONS")
 
 
 def merge_upsert(
@@ -401,8 +310,6 @@ def refresh_monthly_rollup(
     Atomic publish via the same versioned-snapshot writer; the rollup
     is itself month-partitioned so downstream month filters prune too.
     """
-    from pathlib import Path
-
     from awi_datapipelinepublic_spark.sources.readers import read_snapshot
     from awi_datapipelinepublic_spark.sources.writers import (
         _publish_locked,
@@ -415,8 +322,8 @@ def refresh_monthly_rollup(
     # two concurrent refreshes that each read-then-publish unlocked
     # would interleave and one refresh's months would vanish from the
     # survivor's snapshot.
-    target = Path(rollup_path)
-    with publish_lock(target):
+    with publish_lock(rollup_path) as target:
+        rollup_path = str(target)
         recover_table(rollup_path)
         have_rollup = target.exists()
         if since_month is not None and not have_rollup:

@@ -17,7 +17,18 @@ Policy summary (applied by the pipeline writer):
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+
+def table_location(spark: SparkSession, table: str) -> Path:
+    """The directory of catalog name ``table`` under the session
+    warehouse: where a managed table lives, and where
+    operators.merge.merge_into_table publishes its snapshots."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    return Path(warehouse.removeprefix("file:")) / table.lower()
 
 
 def write_bucketed(
@@ -29,7 +40,17 @@ def write_bucketed(
 ) -> None:
     """Write a managed bucketed table (bucketing requires saveAsTable —
     the metastore carries the bucket spec that lets the planner elide
-    the Exchange)."""
+    the Exchange).
+
+    In-memory catalogs (tests, ad-hoc sessions) forget table entries
+    across sessions while the warehouse dirs persist, and Spark then
+    refuses the create (LOCATION_ALREADY_EXISTS). The catalog is the
+    source of truth, so a location with no entry is a dead session's
+    garbage and is removed first. A persistent metastore never hits
+    this: its entries outlive the session."""
+    spark = df.sparkSession
+    if not spark.catalog.tableExists(table):
+        shutil.rmtree(table_location(spark, table), ignore_errors=True)
     w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
     w = w.sortBy(sort_col or bucket_col)
     w.format("parquet").saveAsTable(table)
@@ -113,66 +134,6 @@ def colocated_join(
     lt = spark.table(left_table)
     rt = spark.table(right_table)
     return lt.join(rt, lt[left_key] == rt[right_key], how)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-) -> int:
-    """Compact a small-files parquet directory in place: rewrite to
-    ⌈total_bytes / target⌉ files and atomically swap. Returns the new
-    file count.
-
-    The small-files problem is the slow death of streaming/incremental
-    sinks (every micro-batch appends a few files; a year later the
-    NameNode/listing and per-file open dominate scan time). Sizing by
-    BYTES, not file count, keeps output files at the parquet sweet
-    spot (~128 MB–1 GB) at any scale. The rewrite is one coalesce —
-    no shuffle: coalesce only merges read splits, preserving data
-    order within files. The swap is write-to-side-dir + two renames,
-    the same staged-overwrite discipline as operators/merge.py (a
-    reader never sees a half-written directory; on posix-like local
-    and HDFS the rename pair is near-atomic, on object stores use a
-    manifest/table format instead).
-
-    LOCAL/HDFS-mounted paths only: the byte sizing and the rename
-    swap use the local filesystem, so a non-local URI (s3://, ...)
-    raises up front instead of silently computing total=0 and
-    "compacting" to one file. A crashed previous swap leaves
-    ``<path>__compact_old`` behind; it is detected and recovered
-    (old dir removed if the swap completed, restored if not) before
-    compacting again.
-    """
-    import shutil
-    from pathlib import Path as _P
-
-    if "://" in path and not path.startswith("file://"):
-        raise ValueError(
-            f"compact_files only supports local paths, got {path!r}: the "
-            "size probe and rename swap are local-FS operations — on "
-            "object stores compact through a table format (Iceberg/Delta "
-            "rewrite) instead."
-        )
-    src = _P(path.removeprefix("file://"))
-    old = src.with_name(src.name + "__compact_old")
-    if old.exists():
-        if src.exists():
-            # previous swap completed but cleanup crashed: finish it
-            shutil.rmtree(old)
-        else:
-            # previous swap crashed between the two renames: roll back
-            old.rename(src)
-    if not src.is_dir() or not any(src.rglob("*.parquet")):
-        raise ValueError(f"{path!r} is not a directory containing parquet files")
-    total = sum(f.stat().st_size for f in src.rglob("*.parquet"))
-    n_files = max(1, -(-total // target_file_bytes))
-    tmp = src.with_name(src.name + "__compact_tmp")
-    spark.read.parquet(str(src)).coalesce(n_files).write.mode("overwrite").parquet(str(tmp))
-    src.rename(old)
-    tmp.rename(src)
-    shutil.rmtree(old)
-    return len(list(src.rglob("*.parquet")))
 
 
 def file_key_ranges(

@@ -7,9 +7,12 @@ and swaps so a plan that *reads* the target can still produce it
 (Spark cannot overwrite a path it is reading — the read-then-overwrite
 hazard called out in SURVEY.md §7).
 
-Publishes are single-writer per table, enforced by :func:`publish_lock`:
-a kernel ``flock`` on a sibling lock file. Like the symlink pointer it
-needs a local POSIX filesystem; a crashed holder's lock frees at once.
+This module is the package's only table publisher: the path and
+catalog merges, compaction, the rollup and the streaming CDC snapshot
+all publish through it. Publishes are single-writer per table, enforced
+by :func:`publish_lock`: a kernel ``flock`` on a sibling lock file.
+Like the symlink pointer it needs a local POSIX filesystem; a crashed
+holder's lock frees at once.
 """
 
 from __future__ import annotations
@@ -73,10 +76,26 @@ class ConcurrentPublishError(RuntimeError):
     holder's lock is freed the moment its process dies."""
 
 
+def local_path(path: str | os.PathLike) -> Path:
+    """The local filesystem path of a table: ``file://`` is stripped,
+    any other ``scheme://`` raises ValueError — the pointer flip and the
+    flock are local POSIX operations, and ``Path`` would turn
+    ``s3://b/t`` into the relative dir ``s3:/b/t``."""
+    s = os.fspath(path)
+    if "://" in s and not s.startswith("file://"):
+        raise ValueError(
+            f"tables publish to local paths only, got {s!r}: on object "
+            "stores publish through a table format (Delta/Iceberg) instead"
+        )
+    return Path(s.removeprefix("file://"))
+
+
 @contextmanager
-def publish_lock(target: Path):
+def publish_lock(path: str | os.PathLike):
     """Per-table publish lock: an exclusive, non-blocking ``flock`` on
-    the sibling ``.{name}.lock``, held for the ``with`` body. While one
+    the sibling ``.{name}.lock``, held for the ``with`` body, which gets
+    the table's :func:`local_path` (a non-local URI raises before any
+    filesystem call, so every publisher inherits the guard). While one
     writer holds it, every other writer gets
     :class:`ConcurrentPublishError` — another thread too, since flock
     locks belong to the open file description, not the process. The
@@ -90,6 +109,7 @@ def publish_lock(target: Path):
     holder once the path still names the inode it locked; otherwise
     it retries on the live path.
     """
+    target = local_path(path)
     lock = target.parent / f".{target.name}.lock"
     lock.parent.mkdir(parents=True, exist_ok=True)
     while True:
@@ -108,7 +128,7 @@ def publish_lock(target: Path):
             if not held:
                 continue  # locked a released (unlinked) inode — retry
             try:
-                yield
+                yield target
             finally:
                 lock.unlink(missing_ok=True)
             return
@@ -186,8 +206,7 @@ def overwrite_table(
     :func:`list_versions` — the Delta ``VERSION AS OF`` analog; the
     default 1 keeps only the live snapshot (no storage growth).
     """
-    target = Path(path)
-    with publish_lock(target):
+    with publish_lock(path) as target:
         _publish_locked(df, target, partition_by, keep_versions)
 
 
@@ -256,11 +275,10 @@ def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: lis
     # erased by the compacted (stale) snapshot. Holding the lock for
     # the whole read-repartition-publish serializes compaction against
     # concurrent merges instead of losing their batches.
-    target = Path(path)
-    with publish_lock(target):
+    with publish_lock(path) as target:
         total_bytes = sum(f.stat().st_size for f in target.rglob("*.parquet"))
         n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        df = read_snapshot(spark, path)
+        df = read_snapshot(spark, str(target))
         if partition_by:
             compacted = df.repartition(n_files, *[df[c] for c in partition_by])
         else:

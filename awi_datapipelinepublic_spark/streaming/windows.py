@@ -589,7 +589,7 @@ def cdc_batch_handler(
     exposed (like :func:`near_dedup_batch_handler`) so its
     exactly-once contract is unit-testable: replaying any batch_id —
     after neither, one, or both writes committed, including a crash
-    between the snapshot swap renames — must reproduce identical
+    before the snapshot's pointer flip — must reproduce identical
     snapshot and changes tables."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -636,15 +636,14 @@ def cdc_batch_handler(
                 T.StructField("last_batch", T.LongType(), True),
             ]
         )
-        from pathlib import Path as _P
+        from pathlib import Path
 
-        live, backup = _P(snapshot_path), _P(snapshot_path + "__old")
-        if backup.exists() and not live.exists():
-            # previous run crashed between the two swap renames:
-            # restore the backup before reading
-            backup.rename(live)
-        if live.exists():
-            snap = spark.read.parquet(snapshot_path)
+        from awi_datapipelinepublic_spark.sources.readers import read_snapshot
+        from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
+
+        recover_table(snapshot_path)
+        if Path(snapshot_path).exists():
+            snap = read_snapshot(spark, snapshot_path)
         else:
             snap = spark.createDataFrame([], snap_schema)
         folded = (
@@ -670,26 +669,13 @@ def cdc_batch_handler(
             )
             .toDF(*keys, "hash", "prev_hash", "first_batch", "last_batch")
         )
-        # recoverable swap (mirrors sources/layout.compact_files): the
-        # live dir is never deleted before its replacement is in
-        # place; a crash between the renames leaves __old, which the
-        # read path above restores on the replay
-        staged = _P(snapshot_path + "__stage")
-        import shutil as _sh
-
-        if staged.exists():
-            _sh.rmtree(staged)
-        folded.write.mode("overwrite").parquet(str(staged))
-        if backup.exists():
-            _sh.rmtree(backup)
-        if live.exists():
-            live.rename(backup)
-        staged.rename(live)
-        if backup.exists():
-            _sh.rmtree(backup)
+        # atomic publish (versioned snapshot + pointer flip): a crash
+        # at any step leaves the previous snapshot live, and the replay
+        # folds the same batch over it again
+        overwrite_table(folded, snapshot_path)
 
         changes = (
-            spark.read.parquet(snapshot_path)
+            read_snapshot(spark, snapshot_path)
             .filter(F.col("last_batch") == batch_id)
             .select(
                 *keys,

@@ -431,45 +431,69 @@ def test_keep_versions_time_travel(spark, tmp_path):
     assert [n for n, _ in list_versions(path)] == [5]
 
 
-def test_managed_merge_swap_crash_rolls_forward(spark, tmp_path):
-    """merge_into_table: a cataloged __staging table is a fully
-    materialized merge whose DROP+RENAME swap died — the next call
-    must finish that swap first (never strand or re-lose the batch),
-    for both crash points: before the DROP (both tables exist) and
-    after it (only staging exists)."""
+def test_merge_into_table_repairs_a_publish_without_catalog_sync(spark, drop_table):
+    """A merge that published at the table's location but died before
+    the catalog sync (CREATE/REFRESH/MSCK) leaves a stale catalog entry:
+    the next merge_into_table must return every batch and see both the
+    month the missed merge emptied and the month the new one adds."""
     from awi_datapipelinepublic_spark.operators.merge import (
+        merge_into_path,
         merge_into_table,
-        merge_time_window,
     )
+    from awi_datapipelinepublic_spark.sources.layout import table_location
 
-    t = "t_swap_crash"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {t}__staging")
+    t = "t_sync_crash"
+    drop_table(t)
     b1 = _df(spark, [(1, dt.date(2024, 1, 10), "a"), (2, dt.date(2024, 3, 10), "a")])
-    merge_into_table(spark, t, b1, "d", partition_by_month=False)
-
-    # crash point A: staging written, DROP never ran
+    merge_into_table(spark, t, b1, "d")
+    # the crashed merge: published, catalog never told (March emptied)
     b2 = _df(spark, [(3, dt.date(2024, 2, 1), "b")])
-    merged = merge_time_window(spark.table(t), b2, "d")
-    merged.write.mode("overwrite").format("parquet").saveAsTable(f"{t}__staging")
-    b3 = _df(spark, [(4, dt.date(2024, 3, 1), "c")])
-    merge_into_table(spark, t, b3, "d", partition_by_month=False)
-    got = {r["pk"]: r["v"] for r in spark.table(t).collect()}
-    # sequential semantics: b1 then b2 (recovered) then b3
-    assert got == {1: "a", 3: "b", 4: "c"}
-    assert not spark.catalog.tableExists(f"{t}__staging")
+    merge_into_path(spark, str(table_location(spark, t)), b2, "d")
+    b3 = _df(spark, [(4, dt.date(2024, 4, 1), "c")])
+    merge_into_table(spark, t, b3, "d")
+    rows = spark.table(t).collect()
+    assert {r["pk"]: r["v"] for r in rows} == {1: "a", 3: "b", 4: "c"}
+    assert {r["_merge_month"] for r in rows} == {"2024-01", "2024-02", "2024-04"}
+    parts = {r[0] for r in spark.sql(f"SHOW PARTITIONS {t}").collect()}
+    assert parts == {"_merge_month=2024-01", "_merge_month=2024-02", "_merge_month=2024-04"}
+    drop_table(t)
 
-    # crash point B: DROP ran, RENAME didn't — only staging remains
-    snapshot = spark.table(t)
-    snapshot.write.mode("overwrite").format("parquet").saveAsTable(f"{t}__staging")
+
+def test_merge_into_table_keeps_history_after_drop(spark, drop_table):
+    """The merged catalog table is EXTERNAL over the snapshot pointer:
+    DROP TABLE removes the name only, so a re-merge into the same name
+    (what a new session with an in-memory catalog does) keeps the
+    history instead of starting over."""
+    from awi_datapipelinepublic_spark.operators.merge import merge_into_table
+
+    t = "t_drop_keeps"
+    drop_table(t)
+    b1 = _df(spark, [(1, dt.date(2024, 1, 10), "a"), (2, dt.date(2024, 2, 10), "a")])
+    merge_into_table(spark, t, b1, "d")
+    assert spark.catalog.getTable(t).tableType == "EXTERNAL"
     spark.sql(f"DROP TABLE {t}")
-    b4 = _df(spark, [(5, dt.date(2024, 3, 20), "d4")])
-    merge_into_table(spark, t, b4, "d", partition_by_month=False)
-    got = {r["pk"]: r["v"] for r in spark.table(t).collect()}
-    # recovered snapshot {1,3,4} then b4 (cutoff 2024-03-20, nothing at
-    # or past it in the base) appends pk5
-    assert got == {1: "a", 3: "b", 4: "c", 5: "d4"}
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    b2 = _df(spark, [(3, dt.date(2024, 2, 1), "b")])
+    merge_into_table(spark, t, b2, "d")
+    assert {r["pk"]: r["v"] for r in spark.table(t).collect()} == {1: "a", 3: "b"}
+    drop_table(t)
+
+
+def test_overwrite_table_refuses_object_store_uri(spark, tmp_path, monkeypatch):
+    """publish_lock rejects a non-local URI before any filesystem call
+    (Path would collapse s3://bucket/t into the relative dir
+    s3:/bucket/t under the cwd); file:// names the local path."""
+    monkeypatch.chdir(tmp_path)
+    df = _mk(spark, 0, 5)
+    with pytest.raises(ValueError, match="local paths"):
+        overwrite_table(df, "s3://bucket/t")
+    with pytest.raises(ValueError, match="local paths"):
+        with writers.publish_lock("hdfs://nn/t"):
+            pass
+    assert list(tmp_path.iterdir()) == []
+    overwrite_table(df, f"file://{tmp_path}/t")
+    assert (tmp_path / "t").is_symlink()
+    assert not (tmp_path / "file:").exists()
+    assert _rows(spark, tmp_path / "t") == sorted((r["pk"], r["d"]) for r in df.collect())
 
 
 @settings(max_examples=3, deadline=None)
@@ -743,35 +767,31 @@ def test_publish_lock_freed_when_holder_is_killed(spark, published):
     assert _rows(spark, path) == sorted((r["pk"], r["d"]) for r in new.collect())
 
 
-def test_merge_into_table_publish_lock(spark, tmp_path):
+def test_merge_into_table_publish_lock(spark, tmp_path, drop_table):
     """Catalog-merge twin of the path writer's lock: while another
-    writer holds the table's lock the merge is refused (no staging
-    table created, base untouched); once it releases, the merge lands.
-    Reference semantics: the per-type serialized Cloud Functions
+    writer holds the table's lock the merge is refused (base
+    untouched); once it releases, the merge lands. Reference
+    semantics: the per-type serialized Cloud Functions
     (main.py:39-41)."""
-    from awi_datapipelinepublic_spark.operators.merge import (
-        _table_location,
-        merge_into_table,
-    )
+    from awi_datapipelinepublic_spark.operators.merge import merge_into_table
+    from awi_datapipelinepublic_spark.sources.layout import table_location
     from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
 
     table = "t_lock_catalog_r10"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__staging")
+    drop_table(table)
     b1 = spark.createDataFrame([(1, dt.date(2024, 1, 1))], "pk long, d date")
     merge_into_table(spark, table, b1, "d", partition_by_month=False)
-    loc = _table_location(spark, table)
+    loc = table_location(spark, table)
     b2 = spark.createDataFrame([(2, dt.date(2024, 2, 1))], "pk long, d date")
     with writers.publish_lock(loc):
         with pytest.raises(ConcurrentPublishError):
             merge_into_table(spark, table, b2, "d", partition_by_month=False)
-    assert not spark.catalog.tableExists(f"{table}__staging")
     assert [r["pk"] for r in spark.table(table).collect()] == [1]
     merge_into_table(spark, table, b2, "d", partition_by_month=False)
     assert sorted(r["pk"] for r in spark.table(table).collect()) == [1, 2]
     with writers.publish_lock(loc):
         pass  # released after the catalog merge: a fresh lock acquires
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table(table)
 
 
 @settings(max_examples=3, deadline=None)

@@ -87,6 +87,24 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_orders")
 
 
+def test_write_bucketed_over_leftover_location(spark):
+    """A warehouse dir with no catalog entry (left by a session whose
+    in-memory catalog is gone) must not fail the managed-table create
+    with LOCATION_ALREADY_EXISTS: write_bucketed clears it first."""
+    from awi_datapipelinepublic_spark.sources.layout import table_location, write_bucketed
+
+    t = "bkt_leftover"
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    loc = table_location(spark, t)
+    spark.range(3).write.mode("overwrite").parquet(str(loc))  # the orphan
+    assert not spark.catalog.tableExists(t)
+    try:
+        write_bucketed(spark.range(10), t, "id", 4)
+        assert sorted(r["id"] for r in spark.table(t).collect()) == list(range(10))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_range_sorted_write_rowgroup_stats(spark, sf_dir, tmp_path):
     """write_range_sorted must produce files whose parquet min/max
     stats form (near-)disjoint ranges — the precondition for file- and

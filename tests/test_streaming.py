@@ -453,14 +453,13 @@ def test_stream_stream_left_join_flushes_nulls_on_watermark(
     assert any(ts is None for _, ts in want)
 
 
-def test_cdc_upserts_classify_and_replay_exactly_once(spark, tmp_path):
+def test_cdc_upserts_classify_and_replay_exactly_once(spark, tmp_path, monkeypatch):
     """CDC classifier lifecycle + exactly-once: batch 0 adds keys,
     batch 1 changes one / re-upserts one unchanged / adds one; then
     every replay scenario — after both writes, and after a crash
-    BETWEEN the snapshot swap renames — reproduces identical snapshot
+    before the snapshot's pointer flip — reproduces identical snapshot
     and changes tables."""
-    import shutil
-
+    from awi_datapipelinepublic_spark.sources import writers
     from awi_datapipelinepublic_spark.streaming.windows import cdc_batch_handler
 
     snap = str(tmp_path / "snap")
@@ -478,9 +477,23 @@ def test_cdc_upserts_classify_and_replay_exactly_once(spark, tmp_path):
              for r in spark.read.parquet(changes).collect()}
         return s, c
 
+    def handle_killed_before_flip(batch, batch_id):
+        def crash(target, vdir):
+            raise RuntimeError("killed before the pointer flip")
+
+        with monkeypatch.context() as m:
+            m.setattr(writers, "_point_at", crash)
+            with pytest.raises(RuntimeError, match="pointer flip"):
+                handle(batch, batch_id)
+
     handle(b0, 0)
-    _, c = state()
-    assert c == {(1, 0, "added"), (2, 0, "added")}
+    after_b0 = state()
+    assert after_b0[1] == {(1, 0, "added"), (2, 0, "added")}
+
+    # batch 1's first attempt dies before the snapshot's pointer flip:
+    # nothing it computed is visible, and the replay below is its retry
+    handle_killed_before_flip(b1, 1)
+    assert state() == after_b0
 
     handle(b1, 1)
     full = state()
@@ -493,10 +506,10 @@ def test_cdc_upserts_classify_and_replay_exactly_once(spark, tmp_path):
     handle(b1, 1)
     assert state() == full
 
-    # replay after a crash BETWEEN the snapshot swap renames: live dir
-    # gone, state stranded at __old — the handler must restore and
-    # converge to the same tables
-    shutil.move(snap, snap + "__old")
+    # replay whose snapshot publish dies before the pointer flip: the
+    # committed state stays live and the next replay converges to it
+    handle_killed_before_flip(b1, 1)
+    assert state() == full
     handle(b1, 1)
     assert state() == full
 
