@@ -234,6 +234,20 @@ def scd2_merge(
     )
 
 
+def row_hash(cols: list[str]) -> F.Column:
+    """md5 over null-tagged, unit-separator-joined values of ``cols``:
+    concat_ws drops NULLs silently, so each value is tagged first
+    (distinct from any real string because of the \\x01 marker
+    prefix), making (NULL) and ('') hash apart. Shared by
+    :func:`dataset_diff` and the streaming CDC handler, whose stored
+    snapshot hashes depend on this exact expression."""
+    tagged = [
+        F.coalesce(F.concat(F.lit("\x01v"), F.col(c).cast("string")), F.lit("\x01n"))
+        for c in cols
+    ]
+    return F.md5(F.concat_ws("\x02", *tagged))
+
+
 def dataset_diff(
     old: DataFrame,
     new: DataFrame,
@@ -258,18 +272,8 @@ def dataset_diff(
     if compare_cols is None:
         shared = [c for c in old.columns if c in set(new.columns)]
         compare_cols = [c for c in shared if c not in set(keys)]
-    # md5 over null-tagged, unit-separator-joined values: concat_ws
-    # drops NULLs silently, so tag each value first (distinct from any
-    # real string because of the \x01 marker prefix).
-    def row_hash(df: DataFrame) -> F.Column:
-        tagged = [
-            F.coalesce(F.concat(F.lit("\x01v"), F.col(c).cast("string")), F.lit("\x01n"))
-            for c in compare_cols
-        ]
-        return F.md5(F.concat_ws("\x02", *tagged))
-
-    o = old.select(*keys, row_hash(old).alias("__h_old"))
-    n = new.select(*keys, row_hash(new).alias("__h_new"))
+    o = old.select(*keys, row_hash(compare_cols).alias("__h_old"))
+    n = new.select(*keys, row_hash(compare_cols).alias("__h_new"))
     joined = o.join(n, keys, "full_outer")
     status = (
         F.when(F.col("__h_old").isNull(), F.lit("added"))

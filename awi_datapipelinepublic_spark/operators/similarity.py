@@ -155,26 +155,6 @@ def _probe_masks(h: int, multiprobe_bits: int) -> list[int]:
     return masks
 
 
-def _pair_cosine_udf():
-    """Arrow-vectorized cosine between two array columns (row-paired).
-    One einsum + two norms per Arrow batch — the pairwise analog of
-    _cosine_to_query_udf, same measured rationale (HOF lambdas run
-    interpreted per element; numpy over Arrow batches does not)."""
-    import pandas as pd  # noqa: F811 — self-contained for cloudpickle
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def pair_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.values).astype(float)
-        mb = np.stack(b.values).astype(float)
-        num = np.einsum("ij,ij->i", ma, mb)
-        d = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        safe = np.where(d == 0, 1.0, d)
-        return pd.Series(np.where(d == 0, 0.0, num / safe))
-
-    return pair_cos
-
-
 def _topk_per_left(pairs: DataFrame, k: int) -> DataFrame:
     """Rank candidate pairs per left id on the ROUNDED score (both
     engines rank identical 6dp values, so the (cos, b_id) tiebreak is

@@ -1,5 +1,6 @@
 """Streaming analytics: watermarked windowed aggregation, session
-windows, and a custom stateful operator via applyInPandasWithState.
+windows, dedup, stream-stream joins, per-user stateful operators and
+two replay-safe foreachBatch handlers (near-dedup, CDC).
 
 These are the Structured Streaming twins of operators/events.py — the
 same logical expressions over an unbounded source, with watermarks
@@ -10,11 +11,18 @@ State sizing at scale: a watermark of W and slide S keep ~W/S windows
 per key in the state store; sessionization state is one open session
 per active key. Both are bounded — the prerequisite for running a
 100 TB/day stream without unbounded state growth.
+
+Arbitrary per-key state has one implementation: applyInPandasWithState,
+through :func:`_user_state_operator`, which owns the eviction rule for
+both :func:`running_user_totals` and :func:`running_user_ewma`. Spark
+4's processor-based state API is not used: its state-server protocol
+needs a protobuf runtime in the Python workers.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -58,6 +66,59 @@ def streaming_session_windows(
     )
 
 
+def _user_state_operator(
+    frame: DataFrame,
+    step,
+    state_schema: T.StructType,
+    out_schema: str,
+    timeout_minutes: int | None,
+) -> DataFrame:
+    """The one GroupState driver behind the per-user stateful operators:
+    ``frame`` grouped by ``user_id`` through applyInPandasWithState,
+    with a single eviction rule. A timed-out key's state is removed and
+    nothing is emitted. ``timeout_minutes=None`` registers
+    ``GroupStateTimeout.NoTimeout`` for drain-once (availableNow)
+    callers: with ProcessingTimeTimeout registered, Spark keeps
+    scheduling "no new data but cleaning up state" micro-batches until
+    the timeouts fire, so an availableNow trigger never terminates.
+    Any other value evicts a key idle for that many minutes of
+    processing time, bounding state by the active-user set.
+
+    ``step(pdfs, prev)`` folds one micro-batch of a key's rows into its
+    state (``prev`` is the stored tuple, or None for a new key) and
+    returns ``(new_state, row)``: ``new_state`` None leaves the stored
+    state as it is, and ``row`` holds the output columns after
+    ``user_id``. ``step`` must be a nested def: the update closure is
+    shipped to the Python workers by value.
+    """
+    no_timeout = timeout_minutes is None
+
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        new_state, row = step(pdfs, state.get if state.exists else None)
+        if new_state is not None:
+            state.update(new_state)
+        if not no_timeout:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        yield pd.DataFrame([{"user_id": key[0], **row}])
+
+    return frame.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if no_timeout
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
+    )
+
+
 RUNNING_STATE_SCHEMA = T.StructType(
     [T.StructField("total", T.DoubleType()), T.StructField("n", T.LongType())]
 )
@@ -74,60 +135,29 @@ def running_user_totals(
 
     The per-group state is two scalars — the shape every custom
     accumulating operator takes (fraud scores, rate limits, feature
-    aggregates). Idle users are evicted by processing-time timeout so
-    state stays bounded by the active-user set.
-
-    Pass ``timeout_minutes=None`` for drain-once (availableNow)
-    callers: with ProcessingTimeTimeout registered, Spark keeps
-    scheduling "no new data but cleaning up state" micro-batches until
-    the timeouts fire, so an availableNow trigger never terminates —
-    measured as a silent full-``awaitTermination`` stall (300 s per
-    gate run) before this parameter existed. Timeout eviction is a
-    continuous-deployment feature; a bounded drain doesn't need it.
+    aggregates). Eviction follows :func:`_user_state_operator`: idle
+    users time out after ``timeout_minutes``, and drain-once
+    (availableNow) callers pass None, without which the drain never
+    terminates (measured as a silent full-``awaitTermination`` stall,
+    300 s per gate run).
     """
-    no_timeout = timeout_minutes is None
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        total, n = state.get if state.exists else (0.0, 0)
+    def step(pdfs, prev):
+        total, n = prev if prev is not None else (0.0, 0)
         batch_n = 0
         for pdf in pdfs:
             batch_n += len(pdf)
             n += len(pdf)
             total += float(pdf["value"].sum())
-        state.update((total, n))
-        if not no_timeout:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": user_id,
-                    "batch_events": batch_n,
-                    "running_events": n,
-                    "running_value": total,
-                }
-            ]
-        )
+        row = {"batch_events": batch_n, "running_events": n, "running_value": total}
+        return (total, n), row
 
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=RUNNING_OUT_SCHEMA,
-            stateStructType=RUNNING_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout
-                if no_timeout
-                else GroupStateTimeout.ProcessingTimeTimeout
-            ),
-        )
+    return _user_state_operator(
+        events.select("user_id", "value"),
+        step,
+        RUNNING_STATE_SCHEMA,
+        RUNNING_OUT_SCHEMA,
+        timeout_minutes,
     )
 
 
@@ -200,6 +230,20 @@ def streaming_near_dedup(
     )
 
 
+def _overwrite_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``__batch_id=<batch_id>`` partition of
+    ``path``, replacing that partition only: the replay-safe write of
+    the foreachBatch handlers. Dynamic overwrite is a per-write option,
+    so another writer in the same session never sees it."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(path)
+    )
+
+
 def near_dedup_batch_handler(
     index_path: str,
     out_path: str,
@@ -223,7 +267,12 @@ def near_dedup_batch_handler(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        try:
+        # Only an index with no committed partition means "first batch"
+        # (a first write that died leaves just Spark's staging dir). An
+        # index that has partitions but cannot be read must fail the
+        # batch: read as empty, it would admit every duplicate of the
+        # history it holds.
+        if any(Path(index_path).glob("__batch_id=*")):
             index = (
                 spark.read.parquet(index_path)
                 # a replay must not probe the bands its own first
@@ -231,7 +280,7 @@ def near_dedup_batch_handler(
                 .filter(F.col("__batch_id") != batch_id)
                 .drop("__batch_id")
             )
-        except Exception:  # noqa: BLE001 — first batch: no index yet
+        else:
             index = spark.createDataFrame([], index_schema)
         survivors = dedup_incremental(
             batch_df, index, text_col=text_col, id_col=id_col, k=k
@@ -240,24 +289,10 @@ def near_dedup_batch_handler(
         # Materialize survivors BEFORE appending their bands: the band
         # write must not re-read a half-written out_path.
         kept = kept.localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                kept.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(out_path)
-            )
-            (
-                minhash_band_keys(kept, text_col, id_col, k=k)
-                .withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(index_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_batch_partition(kept, batch_id, out_path)
+        _overwrite_batch_partition(
+            minhash_band_keys(kept, text_col, id_col, k=k), batch_id, index_path
+        )
 
     return handle
 
@@ -328,142 +363,6 @@ def streaming_click_view_left_join(
     ).select("clicks_user", "event_id", "click_ts", "view_ts", "view_value")
 
 
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """Per-user running (count, sum) on the Spark 4 arbitrary-state
-    API. Module-level (not a closure) so its state-transition logic is
-    unit-testable with a fake handle where the transformWithState wire
-    protocol can't start — the semantics contract is the SAME batch
-    oracle :func:`running_user_totals` is pinned to."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState("totals", "total double, n bigint")
-
-    def handleInputRows(self, key, rows, timerValues):
-        total, n = self._totals.get() if self._totals.exists() else (0.0, 0)
-        batch_n = 0
-        for pdf in rows:
-            batch_n += len(pdf)
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._totals.update((total, n))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "batch_events": batch_n,
-                    "running_events": n,
-                    "running_value": total,
-                }
-            ]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-class EwmaProcessor(StatefulProcessor):
-    """Per-user EWMA on the arbitrary-state API — the
-    :func:`running_user_ewma` recursion (sort by ``__ord`` within the
-    batch, NaN/None holds the previous value, cumulative ``seen``
-    carried in state) re-expressed as a typed ValueState. Same
-    unit-testability stance as :class:`RunningTotalsProcessor`."""
-
-    def __init__(self, alpha: float = 0.3) -> None:
-        self._a = float(alpha)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("ewma", "ewma double, seen bigint")
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev, seen = self._state.get() if self._state.exists() else (None, 0)
-        n = 0
-        for pdf in rows:
-            pdf = pdf.sort_values("__ord", kind="mergesort")
-            for x in pdf["value"].tolist():
-                n += 1
-                if x is None or x != x:  # NaN/None: hold previous
-                    continue
-                prev = x if prev is None else (1.0 - self._a) * prev + self._a * x
-        seen += n
-        if prev is not None:
-            self._state.update((float(prev), seen))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "batch_events": n,
-                    "seen_events": seen,
-                    "ewma": prev,
-                }
-            ]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_ewma_tws(
-    events: DataFrame, alpha: float = 0.3, order_col: str = "event_id"
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of :func:`running_user_ewma`
-    — same recursion, modern state API (per-variable ValueState,
-    RocksDB-backed on a real cluster; idle-key eviction becomes a
-    processing-time timer instead of GroupStateTimeout). Same
-    environment note as :func:`running_user_totals_tws`."""
-    return (
-        events.select("user_id", F.col(order_col).alias("__ord"), "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            EwmaProcessor(alpha),
-            outputStructType=EWMA_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    :func:`running_user_totals` — same per-user running totals, on the
-    modern arbitrary-state API (typed ValueState in the state store,
-    RocksDB-backed on a real cluster, instead of the single
-    GroupState tuple).
-
-    Kept alongside the applyInPandasWithState form deliberately: the
-    old API is what most deployed pipelines run; this is the
-    forward-compatible shape (per-state-variable storage, timers,
-    initial-state bootstrap). The equivalence test pins both to the
-    same batch oracle.
-
-    Environment note: the transformWithState protocol needs
-    ``google.protobuf`` ≥ the pyspark gencode version (6.33 for
-    pyspark 4.1) in the Python workers (its state-server wire format);
-    clusters without it fail at stream start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — the equivalence
-    test skips the wire run in that case (this container lacks
-    protobuf entirely) and pins the processor's LOGIC against the
-    batch oracle through a fake handle instead
-    (tests/test_streaming.py), so the semantics stay verified even
-    where the protocol cannot start.
-    """
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotalsProcessor(),
-            outputStructType=RUNNING_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
 EWMA_STATE_SCHEMA = T.StructType(
     [T.StructField("ewma", T.DoubleType()), T.StructField("seen", T.LongType())]
 )
@@ -474,7 +373,7 @@ def running_user_ewma(
     events: DataFrame,
     alpha: float = 0.3,
     order_col: str = "event_id",
-    timeout_minutes: int = 60,
+    timeout_minutes: int | None = 60,
 ) -> DataFrame:
     """Streaming twin of operators/timeseries.ewma: per-user EWMA
     carried across micro-batches in one double of state — the minimal
@@ -486,8 +385,9 @@ def running_user_ewma(
     per-key data in order (file sources with ordered ids; for true
     out-of-order streams, wrap upstream with a watermarked
     sort-per-window first). State per key is one double plus one
-    counter regardless of history length — idle keys evicted by
-    processing-time timeout. ``seen_events`` is the CUMULATIVE event
+    counter regardless of history length, evicted by the
+    :func:`_user_state_operator` rule (``timeout_minutes=None`` for
+    drain-once callers). ``seen_events`` is the CUMULATIVE event
     count carried in state: a monotone per-key sequence, so "latest
     emitted row per key" is ``max(seen_events)`` no matter how the
     source splits files into micro-batches (``batch_events`` is only
@@ -495,14 +395,8 @@ def running_user_ewma(
     """
     a = float(alpha)
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        prev, seen = (state.get[0], state.get[1]) if state.exists else (None, 0)
+    def step(pdfs, prev_state):
+        prev, seen = prev_state if prev_state is not None else (None, 0)
         n = 0
         for pdf in pdfs:
             pdf = pdf.sort_values("__ord", kind="mergesort")
@@ -512,25 +406,15 @@ def running_user_ewma(
                     continue
                 prev = x if prev is None else (1.0 - a) * prev + a * x
         seen += n
-        if prev is not None:
-            state.update((float(prev), seen))
-        state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            [{"user_id": user_id, "batch_events": n, "seen_events": seen, "ewma": prev}]
-        )
+        new_state = (float(prev), seen) if prev is not None else None
+        return new_state, {"batch_events": n, "seen_events": seen, "ewma": prev}
 
-    return (
-        events.select(
-            "user_id", F.col(order_col).alias("__ord"), "value"
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=EWMA_OUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _user_state_operator(
+        events.select("user_id", F.col(order_col).alias("__ord"), "value"),
+        step,
+        EWMA_STATE_SCHEMA,
+        EWMA_OUT_SCHEMA,
+        timeout_minutes,
     )
 
 
@@ -591,6 +475,9 @@ def cdc_batch_handler(
     after neither, one, or both writes committed, including a crash
     before the snapshot's pointer flip — must reproduce identical
     snapshot and changes tables."""
+    from awi_datapipelinepublic_spark.operators.merge import row_hash
+    from awi_datapipelinepublic_spark.sources.readers import read_snapshot
+    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -600,12 +487,6 @@ def cdc_batch_handler(
             cols = [c for c in batch_df.columns if c not in set(keys)]
         else:
             cols = list(compare_cols)
-        tagged = [
-            F.coalesce(
-                F.concat(F.lit("\x01v"), F.col(c).cast("string")), F.lit("\x01n")
-            )
-            for c in cols
-        ]
         # Deterministic intra-batch winner: a micro-batch may carry
         # several upserts for one key; dropDuplicates would keep an
         # arbitrary (partition-layout-dependent) row, so a re-ordered
@@ -613,9 +494,7 @@ def cdc_batch_handler(
         # hash is order-free, making the byte-identical-replay
         # guarantee hold regardless of shuffle layout.
         batch = (
-            batch_df.select(
-                *keys, F.md5(F.concat_ws("\x02", *tagged)).alias("__new_hash")
-            )
+            batch_df.select(*keys, row_hash(cols).alias("__new_hash"))
             .groupBy(*keys)
             .agg(F.max("__new_hash").alias("__new_hash"))
         )
@@ -624,8 +503,6 @@ def cdc_batch_handler(
         # keys would otherwise be type-coerced against a hardcoded
         # bigint on the first full-outer join and corrupt the
         # persisted snapshot).
-        from pyspark.sql import types as T
-
         key_fields = [batch_df.schema[k] for k in keys]
         snap_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True) for f in key_fields]
@@ -636,11 +513,6 @@ def cdc_batch_handler(
                 T.StructField("last_batch", T.LongType(), True),
             ]
         )
-        from pathlib import Path
-
-        from awi_datapipelinepublic_spark.sources.readers import read_snapshot
-        from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
-
         recover_table(snapshot_path)
         if Path(snapshot_path).exists():
             snap = read_snapshot(spark, snapshot_path)
@@ -683,16 +555,8 @@ def cdc_batch_handler(
                 .when(F.col("prev_hash") != F.col("hash"), F.lit("changed"))
                 .otherwise(F.lit("unchanged"))
                 .alias("cdc_status"),
-                F.lit(batch_id).alias("__batch_id"),
             )
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            changes.write.mode("overwrite").partitionBy("__batch_id").parquet(
-                changes_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _overwrite_batch_partition(changes, batch_id, changes_path)
 
     return handle
