@@ -200,11 +200,11 @@ def pagerank(
             )
         # LAZY checkpoint: still truncates lineage (each round's RDD is
         # stored on first computation, so analysis stays O(1) per
-        # round) but — unlike the convergence-tested components loop,
-        # which must materialize to decide whether to stop — a
-        # fixed-iteration loop has no per-round decision, so the whole
-        # chain runs as one pipelined action instead of `iterations`
-        # blocking jobs.
+        # round). It does not pipeline the chain into one action: under
+        # AQE, building the checkpoint runs the round's shuffle stage,
+        # so the loop blocks once per round. What it saves over an
+        # eager checkpoint is the second job per round that fills the
+        # checkpoint (probe: one groupBy, 1 job lazy, 2 eager).
         s_tab = (
             contrib.groupBy("node")
             .agg(F.sum("c").alias("s"))
@@ -428,11 +428,12 @@ def label_propagation(
     (n, lbl) count, but neighbor labels are near-unique per node in
     early rounds so the combine compressed little (measured: fused
     form faster at sf0.1 AND sf1). localCheckpoint each round cuts
-    the growing lineage exactly like the pagerank loop — LAZY (r13),
-    so the whole fixed-round chain pipelines as one action instead of
-    one blocking job per round (eager vs lazy re-measured with the
-    fused exchange: lazy wins; the r12 eager choice was made against
-    the two-exchange rounds).
+    the growing lineage exactly like the pagerank loop — LAZY (r13).
+    Under AQE the round's exchange still runs while the checkpoint is
+    built, so the loop blocks once per round; lazy drops the eager
+    checkpoint's extra fill job per round (eager vs lazy re-measured
+    with the fused exchange: lazy wins; the r12 eager choice was made
+    against the two-exchange rounds).
 
     Returns (node, label) — nodes sharing a label form a community.
     """
@@ -1051,12 +1052,13 @@ def hits_scores(
                 .groupBy("src")
                 .agg(F.sum("a").alias("h"))
             )
-        # Lazy checkpoints: truncate lineage without forcing a job per
-        # iteration (hub also feeds the final output on the last
-        # round, so the checkpoint de-duplicates that second read). A
-        # lost executor mid-chain replays from the last materialized
-        # point; for long chains (k >> 4) switch to eager=True every
-        # few iterations.
+        # Lazy checkpoints: truncate lineage without the eager fill job
+        # per iteration; under AQE building each one still runs its
+        # shuffle stage, so every iteration blocks once (hub also feeds
+        # the final output on the last round, so the checkpoint
+        # de-duplicates that second read). A lost executor mid-chain
+        # replays from the last materialized point; for long chains
+        # (k >> 4) switch to eager=True every few iterations.
         hub = hub.localCheckpoint(eager=False)
         auth = (
             e.join(hub, "src")

@@ -11,14 +11,15 @@ batch's window are discarded (re-statement / late-correction
 semantics), older history is preserved untouched.
 
 Scale design: the base table is partitioned by month(date_col). The
-filter ``date_col < cutoff`` then becomes partition pruning on the
-read side. The publish does not prune yet: every merge republishes the
-whole base as a new versioned snapshot (sources/writers.py), the
-pass-through months included — perfbench's traced ingest reads
-``writers.useful_write_ratio`` 0.44 — so publish cost grows with the
-history, not the batch. A partition-scoped commit is ROADMAP
-direction 1; on a Delta-enabled cluster the exact primitive is
-``replaceWhere(f"{date_col} >= '{cutoff}'")``.
+filter ``date_col < cutoff`` is a pushed row-group filter on the read
+(``PushedFilters``), not partition pruning: it names ``date_col``, not the
+``_merge_month`` partition column. Nor is the publish scoped: every
+merge republishes the whole base as a new versioned snapshot
+(sources/writers.py), the pass-through months included — perfbench's
+traced ingest reads ``writers.useful_write_ratio`` 0.44 — so publish
+cost grows with the history, not the batch. A partition-scoped commit
+is ROADMAP direction 1; on a Delta-enabled cluster the exact primitive
+is ``replaceWhere(f"{date_col} >= '{cutoff}'")``.
 """
 
 from __future__ import annotations
@@ -87,47 +88,37 @@ def merge_into_path(
     """Storage-level merge: read base, merge, atomic-publish back
     (writers.overwrite_table — versioned snapshot + pointer flip).
 
-    Partitioning by month(date_col) makes the read cheap: the
-    ``< cutoff`` filter prunes partitions at scan time. The publish
-    still rewrites the whole base — the batch's months and every older
-    month passed through — into the new snapshot (ROADMAP direction 1
-    scopes it to the owned months). ``allow_schema_evolution`` and
-    ``cutoff`` pass through to :func:`merge_time_window` (added/omitted
-    batch columns pad with NULLs instead of failing the union). An
-    empty batch (None cutoff) over an existing base publishes nothing.
-    The base is read before the publish lock is taken: the lock refuses
-    an overlapping publish, and callers keep one writer per table.
+    The ``< cutoff`` filter is a pushed row-group filter on the read,
+    not partition pruning, and the publish rewrites the whole base —
+    the batch's months and every older month passed through (ROADMAP
+    direction 1 scopes it to the owned months). ``allow_schema_evolution``
+    and ``cutoff`` pass through to :func:`merge_time_window`. An empty
+    batch (None cutoff) over an existing base publishes nothing. The
+    base is read and republished under one publish lock, as the
+    reference's CREATE OR REPLACE … AS SELECT is one statement: an
+    overlapping writer gets ConcurrentPublishError.
     """
     from awi_datapipelinepublic_spark.sources.readers import read_snapshot
-    from awi_datapipelinepublic_spark.sources.writers import local_path, overwrite_table, recover_table
-
-    target = local_path(base_path)
-    base_path = str(target)
-    # Crash recovery FIRST: a kill inside overwrite_table's one-time
-    # legacy-dir migration window leaves the pointer absent while a
-    # complete snapshot exists. Without this, the exists() check below
-    # reads the table as empty, the merge publishes new_batch alone,
-    # and keep_versions GC then deletes the old snapshot — silent loss
-    # of all history.
-    recover_table(base_path)
+    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, publish_lock
 
     part_cols = ["_merge_month"] if partition_by_month else None
     if partition_by_month:
         new_batch = new_batch.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
-    if target.exists():
-        if cutoff is COMPUTE_CUTOFF:
-            cutoff = merge_cutoff(new_batch, date_col)
-        if cutoff is None:
-            return
-        base = read_snapshot(spark, base_path)
-        if partition_by_month and "_merge_month" not in base.columns:
-            base = base.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
-        merged = merge_time_window(
-            base, new_batch, date_col, cutoff, allow_schema_evolution=allow_schema_evolution
-        )
-    else:
-        merged = new_batch
-    overwrite_table(merged, base_path, partition_by=part_cols)
+    with publish_lock(base_path) as held:
+        if held.path.exists():
+            if cutoff is COMPUTE_CUTOFF:
+                cutoff = merge_cutoff(new_batch, date_col)
+            if cutoff is None:
+                return
+            base = read_snapshot(spark, held)
+            if partition_by_month and "_merge_month" not in base.columns:
+                base = base.withColumn("_merge_month", F.date_format(F.col(date_col), "yyyy-MM"))
+            merged = merge_time_window(
+                base, new_batch, date_col, cutoff, allow_schema_evolution=allow_schema_evolution
+            )
+        else:
+            merged = new_batch
+        overwrite_table(merged, held, partition_by=part_cols)
 
 
 def merge_into_table(
@@ -315,22 +306,15 @@ def refresh_monthly_rollup(
     is itself month-partitioned so downstream month filters prune too.
     """
     from awi_datapipelinepublic_spark.sources.readers import read_snapshot
-    from awi_datapipelinepublic_spark.sources.writers import (
-        _publish_locked,
-        publish_lock,
-        recover_table,
-    )
+    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, publish_lock
 
     # The publish lock is held across the READ of the old rollup as
     # well as the merge + publish (same structure as compact_table):
     # two concurrent refreshes that each read-then-publish unlocked
     # would interleave and one refresh's months would vanish from the
     # survivor's snapshot.
-    with publish_lock(rollup_path) as target:
-        rollup_path = str(target)
-        recover_table(rollup_path)
-        have_rollup = target.exists()
-        if since_month is not None and not have_rollup:
+    with publish_lock(rollup_path) as held:
+        if since_month is not None and not held.path.exists():
             # No stored rollup to merge the fresh months over: an
             # incremental refresh would publish ONLY months >=
             # since_month and silently truncate all history. Fall
@@ -341,11 +325,11 @@ def refresh_monthly_rollup(
             base = base.filter(F.col("_merge_month") >= F.lit(since_month))
         fresh = base.groupBy("_merge_month", *group_cols).agg(*agg_exprs)
         if since_month is not None:
-            old = read_snapshot(spark, rollup_path)
+            old = read_snapshot(spark, held)
             merged = merge_time_window(old, fresh, "_merge_month", cutoff=since_month)
         else:
             merged = fresh
-        _publish_locked(merged, target, partition_by=["_merge_month"], keep_versions=1)
+        overwrite_table(merged, held, partition_by=["_merge_month"])
 
 
 def cdc_apply(

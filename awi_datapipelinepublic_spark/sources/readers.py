@@ -13,6 +13,7 @@ its snapshot, so no footer-inference job runs.
 from __future__ import annotations
 
 import json
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -45,7 +46,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SNAPSHOT_SCHEMA = "_schema.json"
 
 
-def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+def read_snapshot(spark: SparkSession, path: str | os.PathLike) -> DataFrame:
     """Read a Parquet table published by ``writers.overwrite_table``
     with the schema recorded in its snapshot, so no footer-inference job
     runs. The pointer is resolved once, so the schema and the listed
@@ -56,7 +57,7 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
     try:
         schema = (snapshot / SNAPSHOT_SCHEMA).read_text()
     except FileNotFoundError:
-        return spark.read.parquet(path)
+        return spark.read.parquet(os.fspath(path))
     return spark.read.schema(T.StructType.fromJson(json.loads(schema))).parquet(str(snapshot))
 
 

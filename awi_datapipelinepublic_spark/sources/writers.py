@@ -21,7 +21,8 @@ import fcntl
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -46,6 +47,11 @@ def _version_dirs(target: Path) -> list[Path]:
     """Hidden versioned snapshots of ``target``, oldest-first (the
     zero-padded counter in the name is the sort key)."""
     return sorted(target.parent.glob(f".{target.name}.v-*"))
+
+
+def _version_number(vdir: Path) -> int:
+    """The publish counter in a snapshot name ``.{name}.v-{n}-{suffix}``."""
+    return int(vdir.name.rsplit(".v-", 1)[1].split("-")[0])
 
 
 def _is_complete(vdir: Path) -> bool:
@@ -90,12 +96,26 @@ def local_path(path: str | os.PathLike) -> Path:
     return Path(s.removeprefix("file://"))
 
 
+@dataclass
+class HeldTable:
+    """What :func:`publish_lock` yields: a table (``path``, also its
+    ``os.fspath``) whose lock the caller holds. :func:`overwrite_table`
+    publishes to it without locking again while ``held``."""
+
+    path: Path
+    held: bool = True
+
+    def __fspath__(self) -> str:
+        return str(self.path)
+
+
 @contextmanager
 def publish_lock(path: str | os.PathLike):
     """Per-table publish lock: an exclusive, non-blocking ``flock`` on
     the sibling ``.{name}.lock``, held for the ``with`` body, which gets
-    the table's :func:`local_path` (a non-local URI raises before any
-    filesystem call, so every publisher inherits the guard). While one
+    a :class:`HeldTable` for the table's :func:`local_path` (a non-local
+    URI raises before any filesystem call, so every publisher inherits
+    the guard) after :func:`recover_table` has run on it. While one
     writer holds it, every other writer gets
     :class:`ConcurrentPublishError` — another thread too, since flock
     locks belong to the open file description, not the process. The
@@ -127,18 +147,22 @@ def publish_lock(path: str | os.PathLike):
                 held = False
             if not held:
                 continue  # locked a released (unlinked) inode — retry
+            table = HeldTable(target)
             try:
-                yield target
+                recover_table(target)
+                yield table
             finally:
+                table.held = False
                 lock.unlink(missing_ok=True)
             return
 
 
-def recover_table(path: str) -> None:
+def recover_table(path: str | os.PathLike) -> None:
     """Roll a crashed publish forward/back: if ``path`` is missing but
     versioned snapshots exist (the only non-atomic step is the one-time
-    legacy-dir migration below), re-point at the newest COMPLETE
-    snapshot. Idempotent; no-op for healthy or never-written tables."""
+    legacy-dir migration in :func:`overwrite_table`), re-point at the
+    newest COMPLETE snapshot. Idempotent; no-op for healthy or
+    never-written tables. :func:`publish_lock` runs it on every acquire."""
     target = Path(path)
     if target.is_symlink() or target.exists():
         return
@@ -152,20 +176,15 @@ def list_versions(path: str) -> list[tuple[int, str]]:
     (version_number, directory) pairs — the engine's answer to
     ``DESCRIBE HISTORY``. Only snapshots kept by ``keep_versions``
     survive; the pointer's target is always last."""
-    target = Path(path)
-    out = []
-    for d in _version_dirs(target):
-        if _is_complete(d):
-            out.append((int(d.name.rsplit(".v-", 1)[1].split("-")[0]), str(d)))
-    return out
+    return [(_version_number(d), str(d)) for d in _version_dirs(Path(path)) if _is_complete(d)]
 
 
 def read_version(spark, path: str, version: int) -> "DataFrame":
     """Time travel: read a specific retained snapshot (a
     ``list_versions`` number) — the Delta ``VERSION AS OF`` analog.
-    Current data is just ``spark.read.parquet(path)`` (the pointer);
-    this resolves a historical dir. Raises KeyError for a version
-    that was never written or has been retention-GC'd."""
+    Current data is ``readers.read_snapshot(spark, path)`` (the
+    pointer); this resolves a historical dir. Raises KeyError for a
+    version that was never written or has been retention-GC'd."""
     for n, d in list_versions(path):
         if n == version:
             return read_snapshot(spark, d)
@@ -177,7 +196,7 @@ def read_version(spark, path: str, version: int) -> "DataFrame":
 
 def overwrite_table(
     df: DataFrame,
-    path: str,
+    path: str | os.PathLike,
     partition_by: list[str] | None = None,
     keep_versions: int = 1,
 ) -> None:
@@ -193,73 +212,65 @@ def overwrite_table(
     _SUCCESS-less dir that GC removes; an interrupted swap leaves the
     old pointer; post-swap GC failure leaves only reclaimable garbage.
 
+    ``path`` is a table path, locked here with :func:`publish_lock`,
+    or the :class:`HeldTable` that lock yielded to a caller that read
+    the table in the same ``with``; reusing that lock makes the
+    read-then-publish atomic.
+
     Production analog: on Delta/Iceberg this is the transaction-log
     commit (`replaceWhere` for the merge); on HDFS the same
     version-dir + pointer-file scheme rides atomic NN renames. The
     one-time migration of a pre-versioning plain directory is the only
-    non-atomic step (dir-away + link-in, two renames); `recover_table`
-    rolls that window forward on next touch. Single-writer per table,
-    like the reference's per-type Cloud Functions.
+    non-atomic step (dir-away + link-in, two renames); the next
+    :func:`publish_lock` rolls that window forward. Single-writer per
+    table, like the reference's per-type Cloud Functions.
 
     ``keep_versions`` retains that many newest complete snapshots
     (current included) for time travel via :func:`read_version` /
     :func:`list_versions` — the Delta ``VERSION AS OF`` analog; the
     default 1 keeps only the live snapshot (no storage growth).
     """
-    with publish_lock(path) as target:
-        _publish_locked(df, target, partition_by, keep_versions)
-
-
-def _publish_locked(
-    df: DataFrame,
-    target: Path,
-    partition_by: list[str] | None,
-    keep_versions: int,
-) -> None:
-    path = str(target)
-    recover_table(path)
-    existing = _version_dirs(target)
-    n = (
-        max((int(d.name.rsplit(".v-", 1)[1].split("-")[0]) for d in existing), default=0)
-        + 1
-    )
-    migrate_legacy = target.exists() and not target.is_symlink()
-    if migrate_legacy:
-        n += 1  # reserve n-1 for the migrated legacy dir, below the new snapshot
-    vdir = target.parent / f".{target.name}.v-{n:08d}-{uuid.uuid4().hex[:8]}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(str(vdir))
-    # Spark reads a declared file schema back all-nullable with partition
-    # columns last, as inference does, so the frame's schema is recorded.
-    (vdir / SNAPSHOT_SCHEMA).write_text(df.schema.json())
-    (vdir / "_SUCCESS").touch()  # belt-and-braces if the committer marker is off
-    if migrate_legacy:
-        # Pre-versioning plain-dir table: fold it into the version
-        # scheme (its _SUCCESS makes it recoverable) so the swap is a
-        # pointer flip from now on. The dir-away rename opens the one
-        # window where `path` is briefly absent; recover_table rolls it
-        # forward (both snapshots are complete, newest wins).
-        os.rename(target, target.parent / f".{target.name}.v-{n - 1:08d}-legacy")
-    _point_at(target, vdir)
-    # GC: keep the pointer's target plus the newest complete snapshots
-    # up to keep_versions; everything else — superseded history past
-    # retention, rolled-past dirs, _SUCCESS-less crash debris — is
-    # garbage. Best-effort: a kill here strands reclaimable dirs that
-    # the next publish sweeps.
-    current = os.readlink(target)
-    keep = {current}
-    for d in reversed(_version_dirs(target)):
-        if len(keep) >= max(1, keep_versions):
-            break
-        if _is_complete(d):
-            keep.add(d.name)
-    for d in _version_dirs(target):
-        if d.name not in keep:
-            shutil.rmtree(d, ignore_errors=True)
-    for leftover in target.parent.glob(f".{target.name}.link-*"):
-        leftover.unlink(missing_ok=True)
+    lock = nullcontext(path) if isinstance(path, HeldTable) else publish_lock(path)
+    with lock as held:
+        if not held.held:
+            raise RuntimeError(f"the publish lock on {held.path} was released")
+        target = held.path
+        existing = _version_dirs(target)
+        n = max(map(_version_number, existing), default=0) + 1
+        migrate_legacy = target.exists() and not target.is_symlink()
+        if migrate_legacy:
+            n += 1  # reserve n-1 for the migrated legacy dir, below the new snapshot
+        vdir = target.parent / f".{target.name}.v-{n:08d}-{uuid.uuid4().hex[:8]}"
+        write_parquet(df, str(vdir), partition_by)
+        # Spark reads a declared file schema back all-nullable with partition
+        # columns last, as inference does, so the frame's schema is recorded.
+        (vdir / SNAPSHOT_SCHEMA).write_text(df.schema.json())
+        (vdir / "_SUCCESS").touch()  # belt-and-braces if the committer marker is off
+        if migrate_legacy:
+            # Pre-versioning plain-dir table: fold it into the version
+            # scheme (its _SUCCESS makes it recoverable) so the swap is a
+            # pointer flip from now on. The dir-away rename opens the one
+            # window where `path` is briefly absent; recover_table rolls it
+            # forward (both snapshots are complete, newest wins).
+            os.rename(target, target.parent / f".{target.name}.v-{n - 1:08d}-legacy")
+        _point_at(target, vdir)
+        # GC: keep the pointer's target plus the newest complete snapshots
+        # up to keep_versions; everything else — superseded history past
+        # retention, rolled-past dirs, _SUCCESS-less crash debris — is
+        # garbage. Best-effort: a kill here strands reclaimable dirs that
+        # the next publish sweeps.
+        current = os.readlink(target)
+        keep = {current}
+        for d in reversed(_version_dirs(target)):
+            if len(keep) >= max(1, keep_versions):
+                break
+            if _is_complete(d):
+                keep.add(d.name)
+        for d in _version_dirs(target):
+            if d.name not in keep:
+                shutil.rmtree(d, ignore_errors=True)
+        for leftover in target.parent.glob(f".{target.name}.link-*"):
+            leftover.unlink(missing_ok=True)
 
 
 def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: list[str] | None = None) -> int:
@@ -275,16 +286,16 @@ def compact_table(spark, path: str, target_file_mb: int = 256, partition_by: lis
     # erased by the compacted (stale) snapshot. Holding the lock for
     # the whole read-repartition-publish serializes compaction against
     # concurrent merges instead of losing their batches.
-    with publish_lock(path) as target:
-        total_bytes = sum(f.stat().st_size for f in target.rglob("*.parquet"))
+    with publish_lock(path) as held:
+        total_bytes = sum(f.stat().st_size for f in held.path.rglob("*.parquet"))
         n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        df = read_snapshot(spark, str(target))
+        df = read_snapshot(spark, held)
         if partition_by:
             compacted = df.repartition(n_files, *[df[c] for c in partition_by])
         else:
             compacted = df.repartition(n_files)
-        _publish_locked(compacted, target, partition_by, keep_versions=1)
-    return len(list(target.rglob("*.parquet")))
+        overwrite_table(compacted, held, partition_by)
+    return len(list(held.path.rglob("*.parquet")))
 
 
 def quarantine(src_path: str, error_dir: str) -> str:

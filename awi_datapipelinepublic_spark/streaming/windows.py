@@ -477,7 +477,7 @@ def cdc_batch_handler(
     snapshot and changes tables."""
     from awi_datapipelinepublic_spark.operators.merge import row_hash
     from awi_datapipelinepublic_spark.sources.readers import read_snapshot
-    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, recover_table
+    from awi_datapipelinepublic_spark.sources.writers import overwrite_table, publish_lock
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -513,50 +513,50 @@ def cdc_batch_handler(
                 T.StructField("last_batch", T.LongType(), True),
             ]
         )
-        recover_table(snapshot_path)
-        if Path(snapshot_path).exists():
-            snap = read_snapshot(spark, snapshot_path)
-        else:
-            snap = spark.createDataFrame([], snap_schema)
-        folded = (
-            snap.join(batch, keys, "full_outer")
-            .select(
-                *keys,
-                F.coalesce("__new_hash", F.col("hash")).alias("__hash"),
-                # prev_hash shifts only when a DIFFERENT batch wrote
-                # last — a replay of batch_id leaves it untouched, so
-                # the classification below is replay-stable
-                F.when(
-                    F.col("__new_hash").isNotNull()
-                    & F.col("hash").isNotNull()
-                    & (F.col("last_batch") != batch_id),
-                    F.col("hash"),
+        with publish_lock(snapshot_path) as held:
+            if held.path.exists():
+                snap = read_snapshot(spark, held)
+            else:
+                snap = spark.createDataFrame([], snap_schema)
+            folded = (
+                snap.join(batch, keys, "full_outer")
+                .select(
+                    *keys,
+                    F.coalesce("__new_hash", F.col("hash")).alias("__hash"),
+                    # prev_hash shifts only when a DIFFERENT batch wrote
+                    # last — a replay of batch_id leaves it untouched, so
+                    # the classification below is replay-stable
+                    F.when(
+                        F.col("__new_hash").isNotNull()
+                        & F.col("hash").isNotNull()
+                        & (F.col("last_batch") != batch_id),
+                        F.col("hash"),
+                    )
+                    .otherwise(F.col("prev_hash"))
+                    .alias("__prev_hash"),
+                    F.coalesce("first_batch", F.lit(batch_id)).alias("__first_batch"),
+                    F.when(F.col("__new_hash").isNotNull(), F.lit(batch_id))
+                    .otherwise(F.col("last_batch"))
+                    .alias("__last_batch"),
                 )
-                .otherwise(F.col("prev_hash"))
-                .alias("__prev_hash"),
-                F.coalesce("first_batch", F.lit(batch_id)).alias("__first_batch"),
-                F.when(F.col("__new_hash").isNotNull(), F.lit(batch_id))
-                .otherwise(F.col("last_batch"))
-                .alias("__last_batch"),
+                .toDF(*keys, "hash", "prev_hash", "first_batch", "last_batch")
             )
-            .toDF(*keys, "hash", "prev_hash", "first_batch", "last_batch")
-        )
-        # atomic publish (versioned snapshot + pointer flip): a crash
-        # at any step leaves the previous snapshot live, and the replay
-        # folds the same batch over it again
-        overwrite_table(folded, snapshot_path)
+            # atomic publish (versioned snapshot + pointer flip): a crash
+            # at any step leaves the previous snapshot live, and the replay
+            # folds the same batch over it again
+            overwrite_table(folded, held)
 
-        changes = (
-            read_snapshot(spark, snapshot_path)
-            .filter(F.col("last_batch") == batch_id)
-            .select(
-                *keys,
-                F.when(F.col("first_batch") == batch_id, F.lit("added"))
-                .when(F.col("prev_hash") != F.col("hash"), F.lit("changed"))
-                .otherwise(F.lit("unchanged"))
-                .alias("cdc_status"),
+            changes = (
+                read_snapshot(spark, held)
+                .filter(F.col("last_batch") == batch_id)
+                .select(
+                    *keys,
+                    F.when(F.col("first_batch") == batch_id, F.lit("added"))
+                    .when(F.col("prev_hash") != F.col("hash"), F.lit("changed"))
+                    .otherwise(F.lit("unchanged"))
+                    .alias("cdc_status"),
+                )
             )
-        )
-        _overwrite_batch_partition(changes, batch_id, changes_path)
+            _overwrite_batch_partition(changes, batch_id, changes_path)
 
     return handle

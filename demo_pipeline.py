@@ -24,6 +24,7 @@ from awi_datapipelinepublic_spark import get_spark
 from awi_datapipelinepublic_spark.plans.runner import run_file
 from awi_datapipelinepublic_spark.plans.spec import PipelineSpec, load_specs, resolve_spec
 from awi_datapipelinepublic_spark.plans.views import retention_view
+from awi_datapipelinepublic_spark.sources.readers import read_snapshot
 
 SCHEMA = [
     {"name": "AgencyNumber", "type": "STRING", "mode": "NULLABLE"},
@@ -102,13 +103,13 @@ def main() -> None:
         drop.write_text(HDR + "\n" + "\n".join(batch) + "\n")
         spec = resolve_spec(specs, drop.name)
         run_file(spark, spec, str(drop))
-        base = spark.read.parquet(spec.base_table_path)
+        base = read_snapshot(spark, spec.base_table_path)
         policies = sorted(
             (r[0] or "<NULL>") for r in base.select("PolicyNumber").collect()
         )
         print(f"[batch {i}] merged base table: {base.count()} rows (policies: {policies})")
 
-    base = spark.read.parquet(specs["renewals"].base_table_path).drop("_merge_month")
+    base = read_snapshot(spark, specs["renewals"].base_table_path).drop("_merge_month")
     view = retention_view(base, dims["geo"], dims["channels"], dims["agencies"], dims["ttypes"])
     print("\nRETENTION view:")
     view.select("PolicyNumber", "Agency", "Geography", "Channel", "TType",

@@ -655,6 +655,86 @@ def test_merge_into_path_recovers_crashed_migration_before_merge(
     assert len(got) == 41, "history must survive the recovered merge"
 
 
+@pytest.mark.parametrize("op", ["merge", "cdc"])
+def test_read_then_publish_holds_the_lock_across_its_read(spark, tmp_path, monkeypatch, op):
+    """A read-then-publish (the path merge, the streaming CDC fold) holds
+    the table's lock from its read to its publish, as the reference's
+    CREATE OR REPLACE … AS SELECT is one statement. Writer A pauses
+    right after reading the current snapshot; a second writer of the
+    same table must get ConcurrentPublishError and publish nothing
+    (unlocked, its publish GCs the snapshot A read and A then fails on
+    a missing file). Resumed, A publishes what it would alone."""
+    import threading
+
+    from awi_datapipelinepublic_spark.sources import readers
+    from awi_datapipelinepublic_spark.sources.writers import ConcurrentPublishError
+    from awi_datapipelinepublic_spark.streaming.windows import cdc_batch_handler
+
+    real_read = readers.read_snapshot
+    a_read, resume = threading.Event(), threading.Event()
+
+    def read_then_pause(spark_, path):
+        df = real_read(spark_, path)
+        if threading.current_thread().name == "writer-a" and not a_read.is_set():
+            a_read.set()
+            resume.wait(timeout=120)
+        return df
+
+    monkeypatch.setattr(readers, "read_snapshot", read_then_pause)
+
+    def table(root):
+        """The three writes (setup, A, B) of one table under ``root``,
+        and a reader of its state."""
+        if op == "merge":
+            path = str(root / "t")
+            writes = [
+                lambda lo=lo: merge_into_path(spark, path, _mk(spark, lo, lo + 20), "d")
+                for lo in (0, 100, 200)
+            ]
+            return writes, lambda: _rows(spark, path)
+        snap, changes = str(root / "snap"), str(root / "changes")
+        handle = cdc_batch_handler(snap, changes, ["k"])
+        batches = [[(1, "a"), (2, "b")], [(2, "B"), (3, "c")], [(1, "x")]]
+        writes = [
+            lambda i=i, rows=rows: handle(spark.createDataFrame(rows, "k long, v string"), i)
+            for i, rows in enumerate(batches)
+        ]
+
+        def state():
+            s = {tuple(r) for r in spark.read.parquet(snap).collect()}
+            c = {tuple(r) for r in spark.read.parquet(changes).collect()}
+            return s, c
+
+        return writes, state
+
+    (setup, write_a, write_b), state = table(tmp_path / "race")
+    setup()
+    before = state()
+    errors = []
+
+    def run_a():
+        try:
+            write_a()
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    a = threading.Thread(target=run_a, name="writer-a")
+    a.start()
+    try:
+        assert a_read.wait(timeout=120), "writer A never read the table"
+        with pytest.raises(ConcurrentPublishError):
+            write_b()
+        assert state() == before, "the refused writer must publish nothing"
+    finally:
+        resume.set()
+        a.join(timeout=120)
+    assert not a.is_alive() and errors == []
+    (setup, write_a, _), alone = table(tmp_path / "alone")
+    setup()
+    write_a()
+    assert state() == alone()
+
+
 def test_publish_lock_race_exactly_one_winner(tmp_path):
     """N threads racing for one table's lock: exactly one acquires and
     the rest are refused. flock locks belong to the open file
