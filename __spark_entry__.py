@@ -320,8 +320,8 @@ def q_agg_min_windowed(spark, sf_dir):
 
 def q_win_row_number(spark, sf_dir):
     """win_row_number (settings.yaml:94): global sequence. Ordered by a
-    unique key so the result is deterministic; the scalable two-pass
-    variant is operators/windows.global_row_number (tested in tests/)."""
+    unique key so the result is deterministic; the scalable variant
+    is operators/windows.global_row_number (tested in tests/)."""
     e = read_events(spark, sf_dir)
     return e.select(
         "event_id",
@@ -1016,7 +1016,7 @@ def q_resample_ohlc(spark, sf_dir):
 
 def q_quantile_bins(spark, sf_dir):
     """Exact NTILE(10) equal-frequency binning of order prices via the
-    scalable two-pass global rank (no single-partition window); per-bin
+    scalable global rank (no single-partition window); per-bin
     count/min/max verified against DuckDB's native NTILE."""
     from awi_datapipelinepublic_spark.operators.windows import quantile_bins
 
@@ -4289,7 +4289,7 @@ def q_benford_test(spark, sf_dir):
 def q_gini_coefficient(spark, sf_dir):
     """Customer-revenue concentration (operators/quality.py:
     gini_coefficient): exact Gini over per-customer revenue cents —
-    rank via the two-pass global_row_number, Σ i·xᵢ as exact
+    rank via global_row_number, Σ i·xᵢ as exact
     DECIMAL(38,0), one float division. The inequality twin of the
     revenue_pareto 80/20 report."""
     from awi_datapipelinepublic_spark.operators.quality import gini_coefficient

@@ -275,8 +275,8 @@ def vocab_build(
     Zipf head collapses within partitions) carrying both corpus freq
     and doc freq (count_distinct via per-doc dedup explode). The
     ordered id assignment rides operators/windows.py:
-    global_row_number (range-partition + broadcast-offset two-pass) —
-    fully parallel even for billion-term raw spaces, identical values
+    global_row_number (one range sort plus Spark's distributed
+    sequence) — no single-partition window, identical values
     to the sequential window because (freq DESC, term ASC) is a total
     order.
     """

@@ -737,11 +737,13 @@ def rfm_segments(
     monetary rank descending with the same tie-break.
 
     Scale: one map-side-combined groupBy(customer) builds the
-    per-customer triple (customer-cardinality, not fact); each rank
-    rides the two-pass
+    per-customer triple (customer-cardinality, not fact); one
+    broadcast aggregate of it gives the recency anchor and the
+    customer count; each rank rides
     :func:`~awi_datapipelinepublic_spark.operators.windows.global_row_number`
-    (range-partition + broadcast offsets — no single-partition
-    window); the final census is a ≤ bins³-row groupBy.
+    (one range sort plus Spark's distributed sequence — no
+    single-partition window); the final census is a ≤ bins³-row
+    groupBy.
 
     Output: (r_score INT, f_score INT, m_score INT,
     n_customers BIGINT, monetary_cents BIGINT).
@@ -753,20 +755,29 @@ def rfm_segments(
         F.count(F.lit(1)).cast("bigint").alias("__freq"),
         F.sum(F.col(cents_col).cast("bigint")).alias("__mon"),
     )
-    anchor = per.agg(F.max("__last").alias("__maxd"))
-    per = per.crossJoin(F.broadcast(anchor)).select(
+    # The recency anchor and the customer cardinality come from ONE
+    # broadcast aggregate of `per`, not a driver count(): a
+    # `scored.count()` action here re-executed the whole 3-rank
+    # lineage once for the count and again for the real consumer —
+    # measured ~2× this query's cost at sf0.1 (guide §5: no driver
+    # actions on query paths).
+    stats = per.agg(
+        F.max("__last").alias("__maxd"),
+        F.count(F.lit(1)).cast("bigint").alias("__n"),
+    )
+    per = per.crossJoin(F.broadcast(stats)).select(
         "__c",
         F.datediff(F.col("__maxd"), F.col("__last")).cast("bigint").alias("__rec"),
         "__freq",
         "__mon",
+        "__n",
     )
     b = int(n_bins)
-    # Chained two-pass ranks (each pass range-partitions the previous
-    # pass's output). An independent-slim-ranks + join-back variant was
-    # measured SLOWER at r12 (3.54 vs 2.63 s at sf0.1): AQE's runtime
-    # exchange reuse already de-duplicates the chain's repeated
-    # subtrees, and the three join-backs added more exchanges than the
-    # chain costs. Kept chained deliberately.
+    # Chained ranks (each sorts the previous rank's output): 12 jobs
+    # for the query at sf0.001, 3 per rank plus the aggregates. An
+    # independent-slim-ranks + join-back variant was measured SLOWER
+    # at r12 (3.54 vs 2.63 s at sf0.1) with the old two-pass rank:
+    # the three join-backs added more exchanges than the chain costs.
     scored = per
     for rank_col, order in (
         ("__rr", [F.col("__rec").asc(), F.col("__c").asc()]),
@@ -774,16 +785,7 @@ def rfm_segments(
         ("__rm", [F.col("__mon").desc(), F.col("__c").asc()]),
     ):
         scored = global_row_number(scored, order, out_col=rank_col)
-    # Customer cardinality as a BROADCAST SCALAR COLUMN, not a driver
-    # count(): a `scored.count()` action here re-executed the whole
-    # 3-rank lineage (three range exchanges + windows) once for the
-    # count and again for the real consumer — measured ~2× this
-    # query's cost at sf0.1 (guide §5: no driver actions on query
-    # paths). The count comes from `per` (the pre-rank subtree), whose
-    # row count global_row_number preserves; `div greatest(__n, 1)` is
-    # the same integer arithmetic as the old literal.
-    n_tab = per.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-    scored = scored.crossJoin(F.broadcast(n_tab)).select(
+    scored = scored.select(
         "__mon",
         F.expr(f"cast(1 + ((__rr - 1) * {b}) div greatest(__n, 1) as int)").alias(
             "r_score"

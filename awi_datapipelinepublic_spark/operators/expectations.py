@@ -230,11 +230,13 @@ def fk_orphans(
     column-wise.
 
     ``pairs`` is [(name, fact_df, fk_col, dim_df, pk_col), ...]. Each
-    relation is ONE left-anti join (hash; AQE broadcasts
-    dimension-sized builds) feeding a scalar count; relations union
-    into the report. NULL fks count as orphans (an unresolvable link
-    is a violation under this audit — filter upstream if NULLs are
-    legitimate).
+    relation is ONE left join against the distinct dimension keys
+    (hash; AQE broadcasts dimension-sized builds) feeding ONE
+    aggregate that counts fact rows and unmatched rows together;
+    relations union into the report. Distinct keys keep the join
+    one-to-one, and a NULL fk never matches, so NULL fks count as
+    orphans (an unresolvable link is a violation under this audit —
+    filter upstream if NULLs are legitimate).
 
     Output: (relation, n_fact BIGINT, n_orphans BIGINT).
     """
@@ -242,9 +244,13 @@ def fk_orphans(
     for name, fact, fk, dim, pk in pairs:
         keys = dim.select(F.col(pk).alias("__pk")).distinct()
         f = fact.select(F.col(fk).alias("__fk"))
-        orphans = f.join(keys, f["__fk"] == keys["__pk"], "left_anti")
-        rep = f.agg(F.count(F.lit(1)).cast("bigint").alias("n_fact")).crossJoin(
-            orphans.agg(F.count(F.lit(1)).cast("bigint").alias("n_orphans"))
-        ).select(F.lit(name).alias("relation"), "n_fact", "n_orphans")
+        rep = (
+            f.join(keys, f["__fk"] == keys["__pk"], "left")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_fact"),
+                F.count_if(F.col("__pk").isNull()).cast("bigint").alias("n_orphans"),
+            )
+            .select(F.lit(name).alias("relation"), "n_fact", "n_orphans")
+        )
         out = rep if out is None else out.unionByName(rep)
     return out

@@ -587,9 +587,10 @@ def negative_sample(
     pair + k negatives) with no RNG state and engine-replayable draws.
 
     Mechanics: rows get a dense 0..n-1 position by id rank via
-    operators/windows.py:global_row_number (range-partition +
-    broadcast-offset two-pass — fully parallel, identical values to a
-    sequential window because the id order is total); each (id, i<k)
+    operators/windows.py:global_row_number (one range sort plus
+    Spark's distributed sequence — no single-partition window,
+    identical values to a sequential window because the id order is
+    total); each (id, i<k)
     pair hashes md5(id||'#'||i) to a 32-bit draw, maps it to an OFFSET
     in 1..n-1 (never 0, so a row can't draw itself), and the negative
     is the id at (pos + offset) % n — a ring walk giving uniform
@@ -1059,8 +1060,8 @@ def gini_coefficient(
     the revenue_pareto 80/20 report (customer concentration, token
     share across sources).
 
-    Scale design: the rank comes from the two-pass global_row_number
-    (range-partition + broadcast offsets — no single-partition
+    Scale design: the rank comes from global_row_number (one range
+    sort plus Spark's distributed sequence — no single-partition
     window); Σ i·xᵢ accumulates as DECIMAL(38,0) (i·x exceeds long
     range around 10⁶ rows × 10¹⁰-scale values; decimal sums are exact
     and associative in both engines, the BQ-NUMERIC lesson). One final
@@ -2097,10 +2098,11 @@ def palma_ratio(
     k₄₀ = 4n DIV 10 of the (value DESC, entity ASC) total order);
     sums are exact; the ratio is one double division.
 
-    Plan: per-entity totals (one partial-agg shuffle), ranks via the
-    two-pass range-partition :func:`~awi_datapipelinepublic_spark.
-    operators.windows.global_row_number` (no single-partition
-    window), one conditional-sum fold against the broadcast count.
+    Plan: per-entity totals (one partial-agg shuffle), ranks via
+    :func:`~awi_datapipelinepublic_spark.operators.windows.
+    global_row_number` (one range sort plus Spark's distributed
+    sequence, no single-partition window), one conditional-sum fold
+    against the broadcast count.
 
     Output: one row — (n, k10, k40, top_sum, bottom_sum BIGINT,
     palma DOUBLE — NULL when the bottom share is 0)."""

@@ -829,11 +829,11 @@ def systematic_sample(
     (a hash sample clusters by chance; systematic sampling is
     variance-free along the sort axis).
 
-    Plan: ranks come from the two-pass range-partition
+    Plan: ranks come from
     :func:`~awi_datapipelinepublic_spark.operators.windows.
-    global_row_number` (no single-partition window), then a filter —
-    the modulo predicate is codegen-resident, so the sample never
-    materializes the full ranked frame beyond the scan.
+    global_row_number` (one range sort plus Spark's distributed
+    sequence, no single-partition window), then a filter on the
+    rank.
 
     Output: the sampled rows plus their global rank in ``id_out``.
     """

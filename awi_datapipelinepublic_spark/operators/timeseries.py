@@ -702,9 +702,10 @@ def theil_sen_trend(
     identical operands cross-engine, so identical doubles; the median
     picks ranks (m+1) DIV 2 and (m+2) DIV 2 of the (slope, i, j)
     total order (equal for odd m) and averages the two, a single
-    reproducible float add/halve. Rank selection rides the two-pass
+    reproducible float add/halve. Rank selection rides
     :func:`~awi_datapipelinepublic_spark.operators.windows.global_row_number`
-    — no single-partition window.
+    (one range sort plus Spark's distributed sequence) — no
+    single-partition window.
 
     Output: one row (n_points BIGINT, n_pairs BIGINT, slope DOUBLE).
     """
@@ -921,8 +922,11 @@ def kendall_tau(
             f"kendall_tau is quadratic by design: {n_rows} points > "
             f"max_points={max_points}; aggregate to a coarser grain first"
         )
+    # Broadcast one side (≤ max_points rows): without the hint the
+    # non-equi join plans as a CartesianProduct of input slices —
+    # 32 × 32 = 1,024 tasks for a 3-row createDataFrame on 32 cores.
     a, b = pts.alias("a"), pts.alias("b")
-    pairs = a.join(b, F.col("a.i") < F.col("b.i"))
+    pairs = a.join(F.broadcast(b), F.col("a.i") < F.col("b.i"))
     dx = F.col("b.x") - F.col("a.x")
     dy = F.col("b.y") - F.col("a.y")
     agg = pairs.agg(

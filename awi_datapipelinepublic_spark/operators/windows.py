@@ -5,13 +5,17 @@ ROW_NUMBER() ordered by entry time, a per-key MIN() window, and the
 IsNew flag derived from their equality. SURVEY.md §2.E notes the
 idiomatic single-window rewrite; both forms are provided. The global
 row_number is the documented scale hazard (one partition): callers at
-scale should use ``global_row_number`` (zipWithIndex-style two-pass)
-instead of ``row_number_global``.
+scale should use ``global_row_number`` (one range sort plus Spark's
+distributed sequence, the zipWithIndex of the pandas-on-Spark default
+index) instead of ``row_number_global``. The running sums and the
+keyed rank keep a two-pass form: range-partition, a per-partition
+window, then a broadcast table of per-partition offsets.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.internal import InternalFunction
 
 
 def row_number_global(df: DataFrame, order_by: list, out_col: str = "Id") -> DataFrame:
@@ -22,37 +26,24 @@ def row_number_global(df: DataFrame, order_by: list, out_col: str = "Id") -> Dat
 
 
 def global_row_number(df: DataFrame, order_by: list, out_col: str = "Id") -> DataFrame:
-    """Scalable global sequence: per-partition row_number + partition
-    offset accumulation (the zipWithIndex pattern, driver-side state =
-    one row per partition).
-
-    Plan shape: range-partition shuffle on the sort key (parallel),
-    per-partition window (no cross-partition data movement), broadcast
-    of the tiny offset table. Equivalent to row_number_global for
-    fully-ordered keys.
-    """
-    ordered = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-    with_pid = ordered.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    local = with_pid.withColumn("__rn", F.row_number().over(w))
-    counts = local.groupBy("__pid").agg(F.max("__rn").alias("__cnt"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn("__off", F.coalesce(F.sum("__cnt").over(woff), F.lit(0)))
-    return (
-        local.join(F.broadcast(offsets.select("__pid", "__off")), "__pid")
-        .withColumn(out_col, (F.col("__rn") + F.col("__off")).cast("long"))
-        .drop("__pid", "__rn", "__off")
+    """Scalable global sequence: ROW_NUMBER() OVER (ORDER BY ...) as
+    one range sort plus Spark's distributed sequence
+    (``AttachDistributedSequence``, the pandas-on-Spark default
+    index): a ``zipWithIndex`` over the sorted rows, cached for the
+    one action and released after it. Equal to row_number_global for
+    fully-ordered keys, with no single-partition window."""
+    return df.sort(*order_by).withColumn(
+        out_col, InternalFunction.distributed_sequence_id() + 1
     )
 
 
 def global_running_sum(
     df: DataFrame, order_by: list, value_col: str, out_col: str = "running_sum"
 ) -> DataFrame:
-    """Scalable global running SUM over a total order —
-    :func:`global_row_number`'s two-pass pattern generalized from
-    COUNT to SUM: range-partition on the sort key, per-partition
-    running sum (no cross-partition movement), then broadcast each
-    partition's offset (the sum of all earlier partitions' totals).
+    """Scalable global running SUM over a total order, in two passes:
+    range-partition on the sort key, per-partition running sum (no
+    cross-partition movement), then broadcast each partition's offset
+    (the sum of all earlier partitions' totals).
 
     The only single-partition window runs over the per-partition
     totals table — one row per shuffle partition, bounded by
@@ -147,13 +138,13 @@ def quantile_bins(
     out_col: str = "bin",
 ) -> DataFrame:
     """Exact equal-frequency binning (feature discretization) with
-    NTILE semantics — but built on the scalable two-pass global row
-    number instead of a single-partition window.
+    NTILE semantics — but built on the scalable global row number
+    instead of a single-partition window.
 
     NTILE(n) is pure arithmetic on the global rank: with q = ⌊N/n⌋,
     r = N mod n, the first r bins hold q+1 rows. Computing rank via
-    global_row_number (range-partition sort + broadcast offsets) and
-    deriving the bin keeps the plan fully parallel where a bare
+    global_row_number (range sort + distributed sequence) and
+    deriving the bin keeps the plan parallel where a bare
     ``ntile().over(Window.orderBy(...))`` would drag every row into
     one partition.
     """
@@ -185,8 +176,10 @@ def global_running_sums(
     exactness contract: integral columns are bit-identical to the
     sequential window.
 
-    CALLER WARNING (applies to every spark_partition_id two-pass
-    helper in this module): do NOT persist/cache ``df``. The offsets
+    CALLER WARNING (applies to the running-sum helpers and
+    :func:`grouped_row_number`, the spark_partition_id two-pass
+    helpers in this module; not to :func:`global_row_number`):
+    do NOT persist/cache ``df``. The offsets
     subtree and the output subtree must observe the SAME physical
     range partitioning; with a raw input their byte-identical plans
     reuse one exchange, but an InMemoryRelation input let AQE coalesce
@@ -224,7 +217,8 @@ def grouped_row_number(
     df: DataFrame, group_cols: list, order_by: list, out_col: str = "rn"
 ) -> DataFrame:
     """Per-group row_number over a total order that stays PARALLEL for
-    low-cardinality groups — the keyed twin of :func:`global_row_number`.
+    low-cardinality groups — the keyed twin of :func:`global_row_number`,
+    on the two-pass offsets form of the running sums.
 
     A plain ``Window.partitionBy(group)`` hash-exchanges each group
     into ONE task: for a 3-value group column over 10⁹ rows, three

@@ -178,8 +178,11 @@ def _local_dim(dim: DataFrame) -> DataFrame:
     converted once per frame object; otherwise ``dim`` itself.
 
     A frame built from Python rows scans a PythonRDD, so every
-    broadcast of it starts Python-worker tasks again; a LocalRelation
-    is broadcast from the JVM without any task."""
+    broadcast of it starts Python-worker tasks again. A LocalRelation
+    needs no Python worker, but broadcasting it still runs one JVM job
+    per dimension on each refresh, with one task per slice of its rows
+    (min(rows, default parallelism): 4/2/4/2 tasks for perfbench's
+    four dimensions on 4 cores)."""
     with _LOCAL_DIMS_LOCK:
         if dim not in _LOCAL_DIMS:
             _LOCAL_DIMS[dim] = (

@@ -2,8 +2,10 @@
 ANN recall, event sessionization edge cases."""
 
 import sys
+import uuid
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -19,12 +21,88 @@ from awi_datapipelinepublic_spark.operators.windows import global_row_number, ro
 from awi_datapipelinepublic_spark.sources.readers import read_events, read_table
 
 
-def test_global_row_number_matches_single_partition_form(spark):
-    df = spark.range(0, 5000).select((F.col("id") * 7919 % 5000).alias("k"))
-    a = {r["k"]: r["Id"] for r in global_row_number(df, [F.col("k")]).collect()}
-    b = {r["k"]: r["Id"] for r in row_number_global(df, [F.col("k")]).collect()}
+def _rank_input(spark, case):
+    """(frame, order) for one rank case: ``rid`` is unique, ``k`` is a
+    permuted key (NULL on every 10th row in the nulls case)."""
+    df = spark.range(0, 5000, numPartitions=7).select(
+        F.col("id").alias("rid"), (F.col("id") * 7919 % 5000).alias("k")
+    )
+    if case == "desc_key":
+        return df, [F.col("k").desc()]
+    if case == "asc_nulls_last":
+        k = F.when(F.col("rid") % 10 == 0, F.lit(None)).otherwise(F.col("k") % 100)
+        return df.withColumn("k", k), [F.col("k").asc_nulls_last(), F.col("rid")]
+    if case == "empty":
+        return df.limit(0), [F.col("k")]
+    if case == "persisted":
+        return df.persist(), [F.col("k")]
+    return df, [F.col("k")]
+
+
+@pytest.mark.parametrize(
+    "case", ["several_partitions", "desc_key", "asc_nulls_last", "empty", "persisted"]
+)
+def test_global_row_number_matches_single_partition_form(spark, case):
+    """The distributed-sequence rank equals ROW_NUMBER() over one
+    partition, including over a persisted input (the two-pass form's
+    old hazard: its offsets and rows could see different partitions)."""
+    df, order = _rank_input(spark, case)
+    try:
+        a = {r["rid"]: r["Id"] for r in global_row_number(df, order).collect()}
+        b = {r["rid"]: r["Id"] for r in row_number_global(df, order).collect()}
+    finally:
+        df.unpersist()
     assert a == b
-    assert sorted(a.values()) == list(range(1, 5001))
+    assert sorted(a.values()) == list(range(1, len(b) + 1))
+    assert len(b) == (0 if case == "empty" else 5000)
+
+
+def _jobs_of(spark, action):
+    """Number of Spark jobs ``action()`` starts."""
+    sc = spark.sparkContext
+    group = f"rank-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_global_row_number_job_budget(spark, sf_dir):
+    """One rank action runs at most 3 jobs (the range sort's sample,
+    the sort, the sequence); rfm_segments' three chained ranks and its
+    aggregates run at most 12 at sf0.001 (44 with the two-pass rank)."""
+    import __spark_entry__ as em
+
+    df = spark.range(0, 5000, numPartitions=7).select(
+        (F.col("id") * 7919 % 5000).alias("k")
+    )
+    assert _jobs_of(spark, lambda: global_row_number(df, [F.col("k")]).collect()) <= 3
+    rfm = em.queries()["rfm_segments"]
+    assert _jobs_of(spark, lambda: rfm(spark, sf_dir).collect()) <= 12
+
+
+def test_global_row_number_releases_its_cache(spark, sf_dir):
+    """The distributed sequence caches its input for one action; a
+    long-lived session running rank actions over and over keeps none
+    of those RDDs."""
+    import __spark_entry__ as em
+
+    sc = spark.sparkContext
+
+    def cached():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    df = spark.range(0, 5000, numPartitions=7).select(
+        (F.col("id") * 7919 % 5000).alias("k")
+    )
+    for _ in range(3):
+        global_row_number(df, [F.col("k")]).collect()
+        em.queries()["rfm_segments"](spark, sf_dir).collect()
+    assert cached() <= before
 
 
 def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):

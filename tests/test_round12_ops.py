@@ -91,6 +91,20 @@ def test_kendall_tau_ties_counted(spark):
     assert r["concordant"] == 2 and r["discordant"] == 0
 
 
+def test_kendall_tau_pair_join_is_not_cartesian(spark):
+    """With 32 input slices the pair self-join must not plan as a
+    CartesianProduct (32 × 32 = 1,024 tasks for 3 rows); one side is
+    broadcast, so it runs as a BroadcastNestedLoopJoin."""
+    from awi_datapipelinepublic_spark.operators.timeseries import kendall_tau
+
+    rows = spark.sparkContext.parallelize([(1, 1, 10), (2, 2, 20), (3, 3, 30)], 32)
+    out = kendall_tau(spark.createDataFrame(rows, "i int, x int, y int"), "x", "y", "i")
+    assert out.collect()[0]["tau_b"] == 1.0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" in plan
+
+
 def test_kendall_tau_refuses_above_cap(spark):
     from awi_datapipelinepublic_spark.operators.timeseries import kendall_tau
 

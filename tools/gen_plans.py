@@ -60,7 +60,7 @@ TARGETS = {
     "gopher_filter": "Gopher rule set: ONE codegen projection over the scan - no Exchange anywhere in the plan",
     "overlap_join": "Interval-interval overlap: binned equi-join (hash join) + residual predicate + overlap-start-bin attribution - never a nested loop",
     "revenue_pareto": "Running share via two-pass global_running_sum: rangepartitioning + __pid-partitioned window; only SinglePartition exchanges are the bounded offset table and the scalar total",
-    "vocab_build": "Ordered token ids via two-pass global_row_number - fully parallel id assignment over the surviving vocabulary",
+    "vocab_build": "Ordered token ids via global_row_number: one range sort + AttachDistributedSequence over the surviving vocabulary - no single-partition window",
     "ks_drift": "Two-sample KS: distinct-value-sized exchanges, BOTH running CDFs in one range-partitioned two-pass window, exact-integer gap max",
     "basket_pair_lift": "Capped pair explode + pair groupBy; item counts broadcast back twice; no cartesian, no SMJ",
     "label_propagation": "Per-round neighbor-join + argmax-struct groupBy, edge-key shuffles only, checkpoint-cut lineage",
@@ -86,17 +86,17 @@ TARGETS = {
     "trimmed_mean": "Per-group trim on a 3-value group key stays PARALLEL: grouped_row_number range-partitions (group, value) jointly, broadcast per-(pid, group) offsets lift local ranks - no one-task-per-group window",
     "cdc_apply": "CDC last-wins: ONE key-partitioned window over the changelog, filter rn=1 AND op<>D - single shuffle, no join",
     "scd2_lookup": "Point-in-time lookup = key equi-join (hash/SMJ, AQE picks) + residual interval filter - no range-join machinery, no nested loop",
-    "rfm_segments": "Customer-cardinality aggregate, then three two-pass global ranks (rangepartitioning + broadcast offsets) and a <=bins^3 census - fact never re-shuffles",
+    "rfm_segments": "Customer-cardinality aggregate, one broadcast anchor+count row, then three global ranks (range sort + AttachDistributedSequence each) and a <=bins^3 census - fact never re-shuffles",
     "vocab_growth": "First-occurrence attribution (term groupBy-min) + two global_running_sum passes - both cumulatives parallel, no single-partition window over documents",
     "hits_scores": "Unnormalized integer HITS: per-iteration edge-join + partial-agg shuffles on DECIMAL(38,0) scores - zero float accumulation in an iterative loop",
     "attribution_time_decay": "Staircase half-life credit: one keyed window + integer shift arithmetic, no self-join, no float pow",
-    "fk_orphans": "Four left-anti joins (AQE-sized dim builds) feeding scalar counts - referential audit without shuffling fact payloads",
+    "fk_orphans": "Four left joins against distinct dim keys (AQE-sized builds), each feeding ONE count + count_if aggregate - referential audit without shuffling fact payloads",
     "auc_eval": "Exact Mann-Whitney AUC: score-cardinality aggregate + two-pass running rank (rangepartitioning, broadcast offsets) folding to ONE scalar row - no single-partition window over near-unique scores",
     "quartile_skew": "Per-group integer-rank quartiles via grouped_row_number: (group, value) range partitioning keeps a 3-value group key PARALLEL; three rank-equality picks in one max(when) aggregate",
     "harmonic_centrality": "Seed-carried level-synchronous BFS: per-hop node-key equi-join + (seed, node) anti-join, checkpoint-cut lineage; harmonic terms are scaled-integer DIV - no float accumulation in an iterative loop",
     "linear_interpolate": "Calendar spine (sequence+explode) left-joined to the pre-aggregated series; segment-count bracketing windows are key-partitioned over the bounded calendar axis",
     "km_hazard": "Life-table: duration-cardinality aggregate, the only ordered window runs over distinct durations (calendar-bounded), n_risk = total minus prefix - fact shuffles once",
-    "kendall_tau": "Declared-quadratic pair concordance over the CALENDAR-bounded daily series: the self-join input is 'days', never fact rows; all counts integer, one sqrt+div at the end",
+    "kendall_tau": "Declared-quadratic pair concordance over the CALENDAR-bounded daily series: the self-join input is 'days', never fact rows, and one side is broadcast (BroadcastNestedLoopJoin, never CartesianProduct); all counts integer, one sqrt+div at the end",
 }
 
 
